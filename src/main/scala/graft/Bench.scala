@@ -70,15 +70,24 @@ object Bench {
       .readString(java.nio.file.Paths.get("/proc/loadavg")).split("\\s+")(0))
     catch { case _: Throwable => None }
 
+  /** A numeric env knob; a value that does not parse fails with an
+    * error naming the key. */
+  private def envNum[T](key: String, default: String)(parse: String => T): T = {
+    val raw = sys.env.getOrElse(key, default)
+    try parse(raw.trim)
+    catch { case e: NumberFormatException =>
+      throw new IllegalArgumentException(s"$key='$raw' is not a number", e) }
+  }
+
   def main(args: Array[String]): Unit = {
     // quiet-host wait (full runs only — subset A/B iteration shouldn't
     // block): poll until 1-min loadavg clears the acceptance gate or
     // the wait budget runs out, so the recorded loadavg_start is the
     // run's ACTUAL starting condition, not a leftover burst
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "1.5").toDouble
+    val maxLoad = envNum("SPARK_GRAFT_MAX_LOAD", "1.5")(_.toDouble)
     if (args.isEmpty) {
       val deadline = System.nanoTime() +
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT_S", "240").toLong * 1000000000L
+        envNum("SPARK_GRAFT_QUIET_WAIT_S", "240")(_.toLong) * 1000000000L
       while (loadavg1m.exists(_.toDouble > maxLoad) && System.nanoTime() < deadline) {
         System.err.println(s"[bench] waiting for loadavg <= $maxLoad " +
           s"(now ${loadavg1m.getOrElse("?")})")
@@ -90,9 +99,9 @@ object Bench {
     // attributable from the start marker (r9's "creep" was this)
     val loadStart = loadavg1m
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = envNum("SPARK_GRAFT_CPUS", "32")(_.toInt)
     val spark = graft.api.GraftSession
-      .builder("graft-bench", s"local[$cpus]", Some(cpus.toInt))
+      .builder("graft-bench", s"local[$cpus]", Some(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -162,7 +171,7 @@ object Bench {
       var f = measureFloor()
       if (args.isEmpty) {
         val floorDeadline = System.nanoTime() +
-          sys.env.getOrElse("SPARK_GRAFT_FLOOR_WAIT_S", "300").toLong * 1000000000L
+          envNum("SPARK_GRAFT_FLOOR_WAIT_S", "300")(_.toLong) * 1000000000L
         while (f >= 0.06 && System.nanoTime() < floorDeadline) {
           System.err.println(f"[bench] floor $f%.3f >= 0.06 gate, waiting for CPU credits")
           Thread.sleep(20000)

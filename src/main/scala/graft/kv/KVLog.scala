@@ -3,7 +3,9 @@ package graft.kv
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+
+import graft.operators.Bounded
 
 /** Directory-backed KV run log: the durable ingest side of [[KVTable]].
   *
@@ -25,6 +27,14 @@ import org.apache.spark.sql.functions.col
   * it, a probe for a key absent from a run skips the run's row groups
   * without touching a data page.
   *
+  * File-per-append rule: a run is written as
+  * [[KVLog.appendFiles]] files, sized from the batch's plan-stats
+  * estimate (`Bounded.decodedBytes`) and the session's
+  * `spark.sql.files.maxPartitionBytes`, and never as more files than
+  * the batch has partitions. A small append is one file, so every
+  * later get, scan and compaction opens one file per run instead of
+  * one per writer task; a large append keeps its parallelism.
+  *
   * Layout: `<path>/run_<id>/` committed parquet runs; `<path>/.tmp_*`
   * in-flight writes (never read). Run ids are monotone per append so
   * newest-run-wins debugging stays easy; correctness needs only the
@@ -36,13 +46,26 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
   /** Durably append one batch as a new committed run. Crash-safe:
     * temp-dir write + atomic rename; a reader never sees the run
     * until the rename, and the rename happens only after Spark's
-    * `_SUCCESS` commit marker exists. */
+    * `_SUCCESS` commit marker exists.
+    *
+    * The batch is coalesced to [[KVLog.appendFiles]] files. A
+    * coalesce never raises an RDD's partition count, so a batch with
+    * fewer partitions writes as it would have. The one way it could
+    * raise the count, Catalyst collapsing it into a caller's own
+    * narrower `coalesce`/`repartition` at the batch's root, is
+    * skipped. */
   def append(batch: DataFrame): Unit = {
     Files.createDirectories(Paths.get(path))
     sweepOrphanedTemps()
     val id = s"${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = Paths.get(path, s".tmp_run_$id")
-    batch.write
+    val files = KVLog.appendFiles(Bounded.decodedBytes(batch),
+      batch.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val sized = batch.queryExecution.logical match {
+      case r: RepartitionOperation if r.numPartitions <= files => batch
+      case _ => batch.coalesce(files)
+    }
+    sized.write
       .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
       .parquet(tmp.toString)
     require(Files.exists(tmp.resolve("_SUCCESS")),
@@ -179,6 +202,14 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
 }
 
 object KVLog {
+  /** Files for one append: `ceil(decodedBytes / maxPartitionBytes)`,
+    * at least one. A pure function of the estimate, so a 4,000-row
+    * batch is one file and only a batch whose decoded estimate exceeds
+    * a scan split is spread over several. */
+  def appendFiles(decodedBytes: BigInt, maxPartitionBytes: Long): Int =
+    ((decodedBytes + maxPartitionBytes - 1) / maxPartitionBytes)
+      .max(1).min(Int.MaxValue).toInt
+
   /** Resolve a (possibly incremental) checkpoint to its FULL
     * committed run list, validating every link of the chain: a full
     * checkpoint's `_CHECKPOINT` records its run count, an

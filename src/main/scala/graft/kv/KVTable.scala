@@ -3,6 +3,8 @@ package graft.kv
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Bounded
+
 /** LSM KV-table semantics on immutable columnar batches, Spark-first.
   *
   * The reference's storage engine (`/root/reference/src/storage_engine`:
@@ -23,6 +25,19 @@ import org.apache.spark.sql.functions._
   * written partitioned by key-range (see [[compacted]]) making point
   * reads touch one partition. Snapshots (`asOf`) filter on `seq`
   * before the merge — also pushed to the scan.
+  *
+  * Read-path shape of [[get]], [[range]] and [[multiGet]]: the runs
+  * the key predicate admits go through `Bounded`'s plan-stats gate
+  * ([[KVTable.BoundedReadBytes]]). Admitted runs that estimate small
+  * are coalesced into one partition BEFORE the latest-wins merge, so
+  * `SinglePartition` already satisfies the aggregate's clustering:
+  * no exchange, one stage, one job even under AQE. A wide estimate
+  * keeps the hash exchange on `key`, so a scan is funnelled into one
+  * task only when the whole admitted estimate is small (the q22
+  * lesson). The key values themselves never reach the generated
+  * code: `graft.plans.ParamLiterals` turns them into field-read
+  * parameters, so every key of one read shape runs the same compiled
+  * classes.
   *
   * @param runs   union of all run files
   * @param keyCol key column name
@@ -60,24 +75,41 @@ final case class KVTable(runs: DataFrame, keyCol: String, seqCol: String,
 
   /** Point lookup, latest version (reference: `db_impl` get through
     * memtable → SSTable levels). Key filter applied pre-merge so it
-    * pushes down to the scan. */
+    * pushes down to the scan; merged in one partition when the
+    * admitted runs estimate small (see the class doc). */
   def get(key: Column): DataFrame =
-    copy(runs = runs.filter(col(keyCol) === key)).merged()
+    boundedMerge(col(keyCol) === key, KVTable.BoundedReadBytes)._1
+
+  /** The runs `pred` admits, merged latest-wins, and whether they
+    * estimate small under `boundedBytes`. Small: coalesced to one
+    * partition before the merge, so the merge needs no exchange.
+    * Wide: the merge's hash exchange on `key`. */
+  private def boundedMerge(pred: Column, boundedBytes: Long): (DataFrame, Boolean) = {
+    val admitted = runs.filter(pred)
+    val small = Bounded.estimatedSmall(admitted, boundedBytes)
+    (copy(runs = if (small) admitted.coalesce(1) else admitted).merged(), small)
+  }
+
+  /** [[boundedMerge]] in key order: the small path's one partition is
+    * sorted in place, the wide path keeps `orderBy`'s sampled range
+    * exchange. */
+  private def orderedRead(pred: Column, boundedBytes: Long): DataFrame = {
+    val (merged, small) = boundedMerge(pred, boundedBytes)
+    if (small) merged.sortWithinPartitions(col(keyCol)) else merged.orderBy(col(keyCol))
+  }
 
   /** Ordered key-range scan with latest-wins merge (reference:
     * range iterators over the merge iterator). The range predicate
     * is CALLER-CONTROLLED, so the result is client-sized only when
     * the caller's range is (VERDICT r9 task 3): the single-partition
-    * zero-exchange sort applies only while the planned size estimate
-    * of the admitted runs stays under [[KVTable.BoundedReadBytes]];
-    * a wide range over a big table keeps `orderBy`'s sampled range
-    * exchange — ordered output either way, never a single-task
-    * reduce of the whole keyspace. */
+    * zero-exchange merge and sort apply only while the planned size
+    * estimate of the admitted runs stays under `boundedBytes`; a wide
+    * range over a big table keeps the merge's hash exchange and
+    * `orderBy`'s sampled range exchange — ordered output either way,
+    * never a single-task reduce of the whole keyspace. */
   def range(lo: Column, hi: Column,
             boundedBytes: Long = KVTable.BoundedReadBytes): DataFrame =
-    graft.operators.Bounded.orderedIfSmall(
-      copy(runs = runs.filter(col(keyCol).between(lo, hi))).merged(),
-      boundedBytes, col(keyCol))
+    orderedRead(col(keyCol).between(lo, hi), boundedBytes)
 
   /** Batched point lookups — the MultiGet API face (reference:
     * `db_impl`'s multi-key read; RocksDB exposes it because a batch
@@ -92,9 +124,7 @@ final case class KVTable(runs: DataFrame, keyCol: String, seqCol: String,
     * the same size gate as [[range]] (the caller controls |keys|). */
   def multiGet(keys: Seq[Any],
                boundedBytes: Long = KVTable.BoundedReadBytes): DataFrame =
-    graft.operators.Bounded.orderedIfSmall(
-      copy(runs = runs.filter(col(keyCol).isin(keys: _*))).merged(),
-      boundedBytes, col(keyCol))
+    orderedRead(col(keyCol).isin(keys: _*), boundedBytes)
 
   /** Read overlaying RANGE tombstones — RocksDB `DeleteRange`
     * semantics (the reference's storage engine deletes point keys;
@@ -152,7 +182,7 @@ final case class KVTable(runs: DataFrame, keyCol: String, seqCol: String,
     * what that task can hold; only the map-side partials are
     * parallel either way. */
   def compacted(): DataFrame =
-    graft.operators.Bounded.orderedIfSmall(
+    Bounded.orderedIfSmall(
       merged(), KVTable.BoundedReadBytes, col(keyCol))
 
   /** Leveled (partial) compaction, reference `compaction/`'s level
@@ -197,25 +227,30 @@ final case class KVTable(runs: DataFrame, keyCol: String, seqCol: String,
     * INSIDE a row group's key range but isn't present — common once
     * upstream runs aren't clustered or keys are high-cardinality
     * non-contiguous; the bloom filter rejects those row groups
-    * without decoding a page. */
+    * without decoding a page.
+    *
+    * The output is reloaded with the schema just written rather than
+    * by inference, which would cost one more job per compaction. */
   def compactTo(path: String, numRanges: Int): KVTable = {
-    merged()
+    val out = merged()
+    out
       .repartitionByRange(numRanges, col(keyCol))
       .sortWithinPartitions(keyCol)
       .write.mode("overwrite")
       .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
       .parquet(path)
-    val reloaded = runs.sparkSession.read.parquet(path)
-      .withColumn(tombstoneCol, org.apache.spark.sql.functions.lit(false))
+    val reloaded = runs.sparkSession.read.schema(out.schema).parquet(path)
+      .withColumn(tombstoneCol, lit(false))
     KVTable(reloaded, keyCol, seqCol, tombstoneCol)
   }
 }
 
 object KVTable {
-  /** Planned-size ceiling under which a range()/multiGet() result is
-    * treated as client-sized (zero-exchange single-partition sort,
-    * Bounded's contract). 64 MB ≈ a generous client page; reads whose
-    * admitted runs estimate wider keep the sampled range sort. The
+  /** Planned-size ceiling under which a get()/range()/multiGet() read
+    * is treated as client-sized (zero-exchange single-partition merge
+    * and sort, Bounded's contract). 64 MB ≈ a generous client page;
+    * reads whose admitted runs estimate wider keep the merge's hash
+    * exchange and the sampled range sort. The
     * estimate is size-only (a Filter doesn't shrink it), so the gate
     * errs toward the scale-safe shape on big tables. */
   val BoundedReadBytes: Long = 64L << 20

@@ -56,8 +56,14 @@ object Bounded {
     * rows — parquet commonly expands 3-10x decoded (ADVICE r11), so
     * an unscaled 64 MB gate could funnel several hundred MB through
     * one task before the fallback triggered. */
-  private def estimatedSmall(df: DataFrame, maxBytes: Long): Boolean =
-    df.queryExecution.analyzed.stats.sizeInBytes * DecompressionFactor <= maxBytes
+  def estimatedSmall(df: DataFrame, maxBytes: Long): Boolean =
+    decodedBytes(df) <= maxBytes
+
+  /** The plan-stats size estimate scaled to decoded bytes (see
+    * [[estimatedSmall]]): what the gate compares, and what
+    * `KVLog.append` sizes its files from. */
+  def decodedBytes(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.stats.sizeInBytes * DecompressionFactor
 
   /** Parquet-to-unsafe-row expansion applied to size estimates at
     * the gate: 4x sits mid-range of parquet's common 3-10x

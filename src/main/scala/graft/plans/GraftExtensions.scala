@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.TextExpressions
 
@@ -16,6 +18,17 @@ import graft.functions.TextExpressions
   * (`/root/reference/src/query_engine/src/function/mod.rs`), done
   * through Spark's sanctioned extension point instead of a private
   * registry.
+  *
+  * It also registers one physical rule, [[ParamLiterals]], which turns
+  * the primitive literals compared inside `FilterExec` conditions into
+  * field-read parameters, so parameterized reads (`KVTable.get`,
+  * `range`, `multiGet`) generate key-independent code and hit the
+  * codegen cache. It goes in through `injectColumnar`'s
+  * `preColumnarTransitions`: that is the one hook that both
+  * `QueryExecution.preparations` and `AdaptiveSparkPlanExec`'s
+  * per-stage rules run right before `CollapseCodegenStages`, so it
+  * covers AQE on and off. Its scope is filter conditions only; scans,
+  * projections and join conditions keep their literals.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -79,5 +92,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(graft.functions.BloomFunctions.getClass.getName,
         "graft_might_contain"),
       graft.functions.BloomFunctions.buildMightContain _))
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
   }
 }

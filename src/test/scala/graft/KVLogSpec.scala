@@ -63,6 +63,42 @@ class KVLogSpec extends SparkSuite {
       Seq((1L, 12.0), (3L, 30.0)))
   }
 
+  private def parquetFiles(run: String): Int =
+    new java.io.File(run).listFiles().count(_.getName.endsWith(".parquet"))
+
+  test("a small append commits one parquet file; a wide one keeps its writer tasks") {
+    val rows = (0L until 4000L).map(k => (k, k, false, k.toDouble))
+    val small = batch(rows)
+    assert(small.rdd.getNumPartitions > 1, "fixture must span several writer tasks")
+    val log = freshLog()
+    log.append(small)
+    assert(log.committedRuns.map(parquetFiles) == Seq(1))
+
+    // a session whose scan split is far below the batch estimate:
+    // the append keeps every writer task, and never widens a caller's
+    // own narrower coalesce
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    import narrow.implicits._
+    val wide = rows.toDF("key", "seq", "tombstone", "v")
+    val wideLog = freshLog()
+    wideLog.append(wide)
+    assert(parquetFiles(wideLog.committedRuns.head) == wide.rdd.getNumPartitions)
+    val callerLog = freshLog()
+    callerLog.append(wide.coalesce(2))
+    assert(parquetFiles(callerLog.committedRuns.head) == 2)
+    assert(wideLog.merged(narrow).count() == 4000 && callerLog.merged(narrow).count() == 4000)
+  }
+
+  test("the append file count is a pure function of the estimate") {
+    val split = 128L << 20
+    assert(KVLog.appendFiles(BigInt(0), split) == 1)
+    assert(KVLog.appendFiles(BigInt(640L << 10), split) == 1)
+    assert(KVLog.appendFiles(BigInt(split), split) == 1)
+    assert(KVLog.appendFiles(BigInt(split) + 1, split) == 2)
+    assert(KVLog.appendFiles(BigInt(10L << 30), split) == 80)
+  }
+
   test("uncompacted runs carry a key bloom filter that rejects absent-key row groups") {
     val log = freshLog()
     // even keys only: any odd probe key lies INSIDE the run's

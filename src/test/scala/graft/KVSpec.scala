@@ -81,6 +81,22 @@ class KVSpec extends SparkSuite {
     assert(wideGet.collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
   }
 
+  test("bounded get and range merge with no exchange; a wide estimate keeps the hash exchange") {
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    // admitted runs under the gate: coalesced to one partition before
+    // the latest-wins merge, so the aggregate needs no exchange
+    Seq(plan(fixture.get(lit(1L))), plan(fixture.range(lit(0L), lit(100L))),
+        plan(fixture.multiGet(Seq(1L, 3L)))).foreach { p =>
+      assert(!p.contains("Exchange"), s"bounded read planned an exchange:\n$p")
+      assert(p.contains("Coalesce 1") && p.contains("HashAggregate"), p)
+    }
+    // threshold 0 simulates admitted runs whose estimate exceeds the
+    // gate: the merge keeps its hash exchange on key
+    val wide = plan(fixture.range(lit(0L), lit(100L), boundedBytes = 0L))
+    assert(wide.contains("Exchange hashpartitioning(key"), wide)
+    assert(!wide.contains("Coalesce"), wide)
+  }
+
   test("write batch: upsert, delete, and fresh insert all apply in order") {
     import spark.implicits._
     val batch = Seq(

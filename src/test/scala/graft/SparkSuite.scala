@@ -21,13 +21,16 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 final class ChunkStamper(dir: String) {
   private val stamped = scala.collection.mutable.Set[String]()
   // far in the past so any file a test writes AFTER the stamped
-  // chunks (none today) would still sort last
+  // chunks (none today) still sorts last; stamp() checks that it stays
+  // in the past
   private var t = System.currentTimeMillis() - 3600000L
 
   /** Stamp every not-yet-stamped file in `dir` with this chunk's
     * mtime. Call once after each chunk write, in arrival order. */
   def stamp(): Unit = {
     t += 10000L
+    require(t < System.currentTimeMillis(),
+      s"chunk stamp $t is not below the current time: too many chunks in $dir")
     val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
     try {
       import scala.jdk.CollectionConverters._
