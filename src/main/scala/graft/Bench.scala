@@ -1,6 +1,6 @@
 package graft
 
-
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: times the headline operator set (SURVEY §6) at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -41,6 +41,11 @@ package graft
   * the JSON; cross-round comparisons of adjusted numbers must use
   * floor_before on both sides (r10's 2.36x and r11's 2.59x were
   * computed against different floor definitions — see SURVEY §6).
+  *
+  * CODEGEN COMPILES: "codegen_compiles" maps each timed query to the
+  * classes Spark compiled over its 3 reps, and "codegen_compiles_total"
+  * is the run's whole count (warmup and floors included), so codegen
+  * cache misses show in the artifact (see graft.api.GraftSession).
   */
 object Bench {
   val headline: Seq[String] = Seq(
@@ -187,7 +192,14 @@ object Bench {
     // time-to-failure is not a throughput) — it lands in the
     // "errors" field instead.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    // classes each query's 3 reps compiled (Spark's JVM-wide codegen
+    // counter): with the codegen cache holding the working set only the
+    // first rep compiles, so a larger count means the cache evicted the
+    // query's own classes between reps
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Long]()
+    def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def minOf3(names: Seq[String]): Seq[(String, Double)] = names.flatMap { name =>
+      val compilesBefore = compileCount
       val times = (1 to 3).flatMap { _ =>
         val t0 = System.nanoTime()
         try {
@@ -201,6 +213,7 @@ object Bench {
             None
         }
       }
+      compiles(name) = compileCount - compilesBefore
       times.minOption.map(name -> _)
     }
     // optional args: bench only these names (local A/B iteration);
@@ -221,6 +234,9 @@ object Bench {
     val t2Json = tier2Results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString(",\"tier2\":{", ",", "}")
     val total = results.map(_._2).sum
+    val compilesJson = compiles.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString(",\"codegen_compiles\":{", ",", "}") +
+      s""","codegen_compiles_total":$compileCount"""
     val errJson =
       if (errors.isEmpty) ""
       else errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
@@ -250,7 +266,7 @@ object Bench {
       s"""{"max_loadavg_start":$maxLoad,"max_floor_before":0.06},""" +
       s""""floor_definition":"adjusted = (spark - floor_before*n)/duckdb""""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$t2Json,"sf":"$sfDir","spark_noop_floor":$noopFloor,"floor_before":$floorBefore,"floor_after":$floorAfter$gateJson$errJson$baseJson$loadJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$t2Json,"sf":"$sfDir","spark_noop_floor":$noopFloor,"floor_before":$floorBefore,"floor_after":$floorAfter$compilesJson$gateJson$errJson$baseJson$loadJson}"""
     println(line)
     // also land the line in a file: sbt prefixes forked stdout with
     // "[info] ", which the driver's JSON parse tripped over in round 1

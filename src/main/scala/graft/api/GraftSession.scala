@@ -14,14 +14,38 @@ import org.apache.spark.sql.SparkSession
   * TPC-H-style dims broadcast, shuffle partitions sized for the local
   * harness via `GRAFT_SHUFFLE_PARTITIONS` (on a real cluster this is
   * set to ~2-3x total cores or left to AQE).
+  *
+  * Codegen cache: every op runs as Janino-compiled whole-stage code,
+  * and Spark keeps compiled classes in one JVM-wide cache sized by the
+  * static conf `spark.sql.codegen.cache.maxEntries` (default 100; read
+  * once per JVM, at the first compile, so set it on the builder). It
+  * is a Guava LRU with 4 segments, so it evicts at about a quarter of
+  * the cap per segment, and its key is (thread context class loader,
+  * source): the same source compiled on the driver and in a task may
+  * take two entries. A round over the benchmark's 12 dashboard ops
+  * compiles ~129 classes, so at the default every round evicts its own
+  * working set and recompiles all of it. The measured loss is task
+  * CPU, more than the compile time alone (likely because a class
+  * defined again starts again in the JVM interpreter).
+  * [[CodegenCacheEntries]] keeps that working set
+  * resident with ample room per segment. `graft.plans.ParamLiterals`
+  * keeps per-key KV reads from filling the larger cache with
+  * single-use classes. A caller's own `.config` on the returned
+  * builder overrides the value.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session:
+    * ~15x the measured per-round working set of ~129 classes, so no
+    * segment of the 4-way LRU fills during a round. */
+  val CodegenCacheEntries: Int = 2000
+
   def builder(appName: String = "graft", master: String = "local[32]",
               shufflePartitions: Option[Int] = None): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(master)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions",
         shufflePartitions.map(_.toString)
           .getOrElse(sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32")))

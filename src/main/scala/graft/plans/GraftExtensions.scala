@@ -23,7 +23,8 @@ import graft.functions.TextExpressions
   * the primitive literals compared inside `FilterExec` conditions into
   * field-read parameters, so parameterized reads (`KVTable.get`,
   * `range`, `multiGet`) generate key-independent code and hit the
-  * codegen cache. It goes in through `injectColumnar`'s
+  * codegen cache instead of filling it with per-key classes (its size
+  * is set in `graft.api.GraftSession`). It goes in through `injectColumnar`'s
   * `preColumnarTransitions`: that is the one hook that both
   * `QueryExecution.preparations` and `AdaptiveSparkPlanExec`'s
   * per-stage rules run right before `CollapseCodegenStages`, so it

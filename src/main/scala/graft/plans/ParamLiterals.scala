@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.DataType
   * KV point get. Here the value travels in the generated object's
   * `references` array and is copied once into a primitive field when
   * the class initializes, so the source depends on the plan's shape
-  * only and compiles once per shape.
+  * only and compiles once per shape. That also keeps per-key classes
+  * out of the codegen cache, which `graft.api.GraftSession` sizes to
+  * the engine's working set of plan shapes.
   *
   * Deliberately NOT a `Literal` subclass: `Literal.equals` matches any
   * `Literal` instance, so `transform`'s `fastEquals` would treat the

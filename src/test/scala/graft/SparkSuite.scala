@@ -55,6 +55,8 @@ object SparkSuite {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.api.GraftSession.CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
