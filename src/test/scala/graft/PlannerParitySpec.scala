@@ -5,11 +5,11 @@ import java.io.File
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Golden-plan parity tier (VERDICT r7 task 6): every case in the
-  * reference's planner test suite (`/root/reference/tests/planner/
-  * {column-pruning,predicate-pushdown,limit-pushdown,
-  * combine-operators}.yml` — the golden plans its optimizer rules
-  * must produce) mapped to the corresponding Catalyst plan property
-  * on the same SQL over the same fixture tables, asserted on graft's
+  * reference's planner test suite (`tests/planner/{column-pruning,
+  * predicate-pushdown,limit-pushdown,combine-operators}.yml` — the
+  * golden plans its optimizer rules must produce) mapped to the
+  * corresponding Catalyst plan property on the same SQL over fixture
+  * tables with the columns that SQL names, asserted on graft's
   * physical plan.
   *
   * The mapping is by PROPERTY, not by plan text: the reference
@@ -22,29 +22,37 @@ import org.apache.spark.sql.execution.FormattedMode
   * divergence is noted inline — the data-reduction the reference
   * rule exists for still happens, earlier.
   *
-  * Fixtures are the reference's own csvs re-materialized as parquet
-  * (pushdown/pruning are scan-level properties; parquet is this
-  * engine's scan), int columns as Int64 like the reference's binder.
+  * Fixtures are the committed slt corpus csvs (`tests/csv` under
+  * [[SltReplaySpec.RefRoot]]: t1(a,b,c), t2(a,b,c),
+  * employee(id,first_name,last_name,state,department_id),
+  * department(id,department_name,floor), state(id,state_code,
+  * state_name)) materialized as parquet (pushdown/pruning are
+  * scan-level properties; parquet is this engine's scan), int columns
+  * as Int64 like the reference's binder. Every fixture has a column
+  * no query here reads, so each pruning assertion can fail. The five
+  * tiny tables are rewritten on every run, so a stale `target/`
+  * never stands in for a changed or missing csv.
   */
 class PlannerParitySpec extends SparkSuite {
 
-  private val CsvRoot = "/root/reference/tests/csv"
+  private val CsvRoot = SltReplaySpec.CsvRoot
   private val warehouse = "target/planner_parity_tables"
 
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.catalog.clearCache()
+    if (!new File(CsvRoot).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"planner fixture directory not found: $CsvRoot")
     for (t <- Seq("t1", "t2", "employee", "department", "state")) {
       val pq = s"$warehouse/$t"
-      if (!new File(s"$pq/_SUCCESS").exists()) {
-        val df = spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(s"$CsvRoot/$t.csv")
-        df.select(df.schema.map(f =>
-          if (f.dataType == org.apache.spark.sql.types.IntegerType)
-            org.apache.spark.sql.functions.col(f.name).cast("bigint").as(f.name)
-          else org.apache.spark.sql.functions.col(f.name)): _*)
-          .write.mode("overwrite").parquet(pq)
-      }
+      val df = spark.read.option("header", "true")
+        .option("inferSchema", "true").csv(s"$CsvRoot/$t.csv")
+      df.select(df.schema.map(f =>
+        if (f.dataType == org.apache.spark.sql.types.IntegerType)
+          org.apache.spark.sql.functions.col(f.name).cast("bigint").as(f.name)
+        else org.apache.spark.sql.functions.col(f.name)): _*)
+        .write.mode("overwrite").parquet(pq)
       spark.read.parquet(pq).createOrReplaceTempView(t)
     }
   }

@@ -5,45 +5,50 @@ import java.io.File
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** Third correctness tier: replay the reference engine's OWN
-  * sqllogictest files (every .slt under `/root/reference/tests/slt`)
-  * against graft's SQL surface, verbatim.
+/** Third correctness tier: replay an sqllogictest corpus against
+  * graft's SQL surface.
   *
-  * The reference harness (`tests/sql_logic/src/lib.rs`) registers
-  * every csv under `tests/csv` as a table named by file stem, then runs
-  * each slt record through its SQL engine and compares rendered rows
-  * under the sqlite slt rules (`util/mod.rs:45-80`: space-joined
-  * columns, `NULL` for null, `(empty)` for the empty string). This
-  * spec reproduces that loop on Spark: same fixtures (CSV string
-  * columns normalized so an empty field reads as '' exactly like the
-  * reference's arrow reader), same records, same rendering.
+  * The corpus is in the repository, under `src/test/resources/slt`,
+  * laid out like the reference engine's test tree: `tests/slt/` holds
+  * one .slt file per SQL topic (aggregation, alias, comparison,
+  * conjunction, create_table, distinct, explain, filter, insert, join,
+  * join_filter, limit, order, pragma, scalar_function, select,
+  * subquery, table_function, time) plus `tests/slt/csv/csv.slt`, and
+  * `tests/csv/` holds the fixtures. It replaces the reference's own
+  * slt files, which this repository never held: the records are
+  * written for what each topic covers, and every expected block comes
+  * from DuckDB 1.0.0 through `tools/slt_oracle.py` (`--check` re-runs
+  * DuckDB and fails on any block that differs), never from graft.
+  *
+  * The loop follows the reference harness (`tests/sql_logic`): every
+  * csv under `tests/csv` is registered as a table named by its stem,
+  * each slt record runs through the SQL engine, and rows are compared
+  * under the sqlite slt rules (space-joined columns, `NULL` for null,
+  * `(empty)` for the empty string). Fixture string columns are
+  * normalized so an empty field reads as '' (an empty numeric field
+  * stays NULL), as the oracle loads them too.
   *
   * Deviations, each declared with a reason rather than silently
   * skipped:
-  *  - file denylist: `explain.slt` only — its EXPECTED text is the
-  *    reference's private plan renderer (q27_explain covers the
-  *    capability). The catalog files (`pragma`, `table_function`)
-  *    replay through declared normalization shims: SHOW TABLES /
-  *    DESCRIBE / template_query_tables() / template_query_columns()
-  *    render the session catalog in the reference's row shape, and a
-  *    bare-path `FROM 'x.csv'` registers the csv as a view named by
-  *    its stem;
-  *  - record denylist: statements whose expected value is wrong or
-  *    whose required behavior Spark (like DuckDB/Postgres) defines
-  *    differently — pinned below with reasons;
+  *  - file denylist: `explain.slt` only — its expected text is DuckDB's
+  *    own plan renderer (q27_explain covers the capability). The
+  *    catalog files (`pragma`, `table_function`) replay through
+  *    declared normalization shims: SHOW TABLES / DESCRIBE /
+  *    template_query_tables() / template_query_columns() render the
+  *    session catalog in the reference's row shape, and a bare-path
+  *    `FROM 'x.csv'` registers the csv as a view named by its stem;
+  *  - record denylist: statements whose row set SQL leaves undefined,
+  *    or whose required behavior Spark defines differently from the
+  *    oracle — pinned below with reasons;
   *  - dialect shims applied to statement TEXT before execution
   *    (`VARCHAR`→`STRING`, `X UNSIGNED`→`X`, `read_csv(...)`→a
   *    registered scan view, `tests/…` paths→absolute): syntax
   *    translation only, never semantics;
   *  - queries with no ORDER BY compare as multisets (SQL defines no
-  *    order; the slt files encode the reference's physical hash-agg
-  *    order, which no other engine reproduces).
+  *    order; the oracle writes such blocks sorted).
   */
 class SltReplaySpec extends SparkSuite {
-
-  private val SltRoot = "/root/reference/tests/slt"
-  private val CsvRoot = "/root/reference/tests/csv"
-  private val RefRoot = "/root/reference"
+  import SltReplaySpec._
 
   /** Files not replayed, with the reason on record. pragma.slt and
     * table_function.slt replay since round 8 through declared
@@ -52,22 +57,18 @@ class SltReplaySpec extends SparkSuite {
     * the session catalog, bare-path FROM registered as a csv view) —
     * only the plan renderer remains engine-private. */
   val fileDenylist: Map[String, String] = Map(
-    "explain.slt" -> "expected text is the reference's private plan renderer (q27_explain covers)")
+    "explain.slt" -> "expected text is DuckDB's private plan renderer (q27_explain covers)")
 
   /** Records not replayed: keyed by (file, exact first SQL line). */
   val recordDenylist: Map[(String, String), String] = Map(
-    ("time.slt", "select date '1998-12-01' - interval '1' day;") ->
-      "reference expectation is arithmetically wrong (1998-12-01 minus 1 day is 1998-11-30, not 1998-11-29)",
-    ("subquery.slt", "select * from (select * from t1 where a > 1) where b > 7;") ->
-      "expects an error for an unaliased derived table; Spark (like DuckDB/MySQL) allows it",
     ("alias.slt", "select a as c1 from t1 where c1 = 1;") ->
-      "SELECT-list alias in WHERE: Spark (like Postgres/DuckDB) resolves WHERE against source columns",
+      "SELECT-list alias in WHERE: DuckDB resolves it; Spark, like Postgres, resolves WHERE against the FROM columns only",
     ("filter.slt", "select v1+1 as a from t1 where a >= 2;") ->
       "SELECT-list alias in WHERE (same class as alias.slt)",
     ("filter.slt", "select v1+1 as a from t1 where a = a;") ->
       "SELECT-list alias in WHERE (same class as alias.slt)",
     ("limit.slt", "select v1 from t1 limit 2 offset 1;") ->
-      "LIMIT/OFFSET row set without ORDER BY is undefined; expectation encodes single-partition insertion order",
+      "LIMIT/OFFSET row set without ORDER BY is undefined; the expected block encodes the oracle's insertion order",
     ("limit.slt", "select v1 from t1 offset 2;") ->
       "OFFSET row set without ORDER BY is undefined (same class)",
     ("limit.slt", "select v1 from t1 limit 2;") ->
@@ -241,7 +242,7 @@ class SltReplaySpec extends SparkSuite {
     // fresh fixture views per file, '' semantics for empty strings
     // (the reference's arrow CSV reader yields '' for an empty varchar
     // field and NULL for an empty numeric one)
-    for (c <- new File(CsvRoot).listFiles.toSeq if c.getName.endsWith(".csv")) {
+    for (c <- listed(CsvRoot, ".csv")) {
       val df0 = spark.read.option("header", "true")
         .option("inferSchema", "true").csv(c.getPath)
       df0.select(df0.schema.map(fl =>
@@ -315,9 +316,7 @@ class SltReplaySpec extends SparkSuite {
   }
 
   private def sltFiles: Seq[File] =
-    (new File(SltRoot).listFiles.toSeq ++
-      new File(s"$SltRoot/csv").listFiles.toSeq)
-      .filter(_.getName.endsWith(".slt")).sortBy(_.getName)
+    (listed(SltRoot, ".slt") ++ listed(s"$SltRoot/csv", ".slt")).sortBy(_.getName)
 
   test("reference slt files replay green (pinned counts)") {
     var files = 0; var green = 0; var records = 0; var skips = 0
@@ -335,10 +334,27 @@ class SltReplaySpec extends SparkSuite {
     val failText = report.result().mkString("\n")
     assert(failText.isEmpty, s"slt replay failures:\n$failText")
     // pinned coverage: 20 files on disk, 1 file-denylisted with a
-    // reason, 8 record-denylisted with reasons, the rest replay green
+    // reason, 6 record-denylisted with reasons, the rest replay green
     assert(files == 20, s"slt file count changed: $files")
     assert(green == 19, s"green file count: $green")
-    assert(skips == 8, s"record denylist count: $skips")
+    assert(skips == 6, s"record denylist count: $skips")
     assert(records >= 120, s"replayed record count: $records")
+  }
+}
+
+object SltReplaySpec {
+  /** The in-repository corpus root: `tests/slt` and `tests/csv` below
+    * it, so the records' `'tests/…'` paths resolve against it. */
+  val RefRoot: String = new File("src/test/resources/slt").getAbsolutePath
+  val SltRoot: String = s"$RefRoot/tests/slt"
+  val CsvRoot: String = s"$RefRoot/tests/csv"
+
+  /** The files directly in `dir` whose names end in `ext`; fails
+    * naming `dir` when it does not exist. */
+  def listed(dir: String, ext: String): Seq[File] = {
+    val fs = new File(dir).listFiles
+    if (fs == null) throw new java.io.FileNotFoundException(
+      s"slt corpus directory not found: $dir")
+    fs.toSeq.filter(_.getName.endsWith(ext))
   }
 }
