@@ -75,15 +75,6 @@ object RangeJoin {
     // the (cheap) join reduce over reused shuffle map output, far
     // cheaper than a full materialization.
     //
-    // ONE-TEXT construction (r12, measured): a single sql() analysis
-    // pass replacing the ~8-Dataset withinGap chain. The SQL is
-    // withinGap's bin-and-overlap verbatim (one side replicated into
-    // bin and bin−1, residual range predicate in the join output;
-    // the SHUFFLE_HASH hint on the un-exploded side keeps the keyed
-    // shuffle join — see withinGap's scale note). withinGap remains
-    // the API face for other callers; a semantic change THERE must
-    // be mirrored HERE.
-    //
     // Tail audit (r12, corrects the r11 note): the r11 negative
     // (0.36 → 0.65 s) was the COALESCE-path gate folding the whole
     // candidate-evaluation stage into one task, not an oversized
@@ -93,55 +84,36 @@ object RangeJoin {
     // over any corpus it exceeds the gate, so the op always lands
     // on the sampled range sort anyway. Keep ORDER BY directly; the
     // pair sort legitimately range-partitions at every scale.
-    Tables.registerAllOnce(s, dir)
-    s.sql("""
-      SELECT /*+ SHUFFLE_HASH(a) */
-             a.event_id AS id_a, b.event_id AS id_b
-      FROM (SELECT event_id, ts_us, ts_us div 1000000 AS _bin
-            FROM (SELECT event_id, unix_micros(ts) AS ts_us FROM events)) a
-      JOIN (SELECT event_id, ts_us,
-                   explode(array(ts_us div 1000000, ts_us div 1000000 - 1))
-                     AS _bin
-            FROM (SELECT event_id, unix_micros(ts) AS ts_us FROM events)) b
-        ON a._bin = b._bin
-      WHERE b.ts_us >= a.ts_us AND b.ts_us <= a.ts_us + 1000000
-        AND a.event_id <> b.event_id
-      ORDER BY id_a, id_b
-    """)
+    val ev = Tables.load(s, dir, "events")
+      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"))
+    withinGap(ev, ev, 1000000L)
+      .filter(col("a.event_id") =!= col("b.event_id"))
+      .select(col("a.event_id").as("id_a"), col("b.event_id").as("id_b"))
+      .orderBy("id_a", "id_b")
   }
 
-  /** AS-OF join, Spark-first: for each left row, the latest right
-    * row with `right.ts <= left.ts` per key. Instead of a per-row
-    * backward search (or a range join + argmax), tag and UNION both
-    * sides and take a running `last(right_id) ignoring nulls` over a
-    * (key, ts)-sorted window — ONE shuffle + sort per key, the same
-    * cost as a single sort-merge join pass, and no pair blowup at
-    * any skew. At equal timestamps the right row sorts first
-    * (side 0), making the match inclusive. */
-  /** Output columns: (key, left_id, ts_us, right_id, right_ts_us).
-    * `leftId` / `rightId` name the id columns IN the inputs. The
+  /** AS-OF join, Spark-first, over ONE source frame: for each fact
+    * row (`leftPred`), the latest dimension row (`rightPred`) with
+    * `right.ts <= left.ts` per key. Instead of a per-row backward
+    * search (or a range join + argmax), both kinds of row are tagged
+    * in one scan and a running `last(right_id) ignoring nulls` runs
+    * over a (key, ts)-sorted window — ONE shuffle + sort per key, the
+    * same cost as a single sort-merge join pass, and no pair blowup
+    * at any skew. At equal timestamps the right row sorts first
+    * (side 0), making the match inclusive.
+    *
+    * This is the common enrichment shape: fact rows and dimension
+    * rows are event types of one log. A union of two filtered frames
+    * would cost a second corpus read — Catalyst does not merge
+    * identical scans across union branches. Rows matching neither
+    * predicate are dropped. The predicates must be DISJOINT: a row
+    * matching both is tagged once, as a dimension row.
+    *
+    * Output columns: (key, left_id, ts_us, right_id, right_ts_us).
+    * `leftId` / `rightId` name the id columns IN the input. The
     * matched right row's timestamp rides along in a second running
     * `last` over the same window (zero extra shuffles) so callers
     * can apply staleness/tolerance bounds post-hoc ([[q49AsofTolerance]]). */
-  def asof(left: DataFrame, right: DataFrame, key: String,
-           leftId: String, rightId: String): DataFrame =
-    asofCore(right.select(col(key), col("ts_us"), lit(0).as("_side"),
-        lit(null).cast("long").as("_lid"), col(rightId).cast("long").as("_rid"))
-      .unionByName(left.select(col(key), col("ts_us"), lit(1).as("_side"),
-        col(leftId).cast("long").as("_lid"), lit(null).cast("long").as("_rid"))),
-      key)
-
-  /** [[asof]] when BOTH sides filter the SAME source frame with
-    * DISJOINT predicates (the common enrichment shape: fact rows and
-    * dimension rows are event types of one log). The two-frame API
-    * costs a second corpus read there — Catalyst does not merge
-    * identical scans across union branches — so this builds the
-    * tagged frame in ONE scan: rows matching `rightPred` become
-    * side-0 dimension rows, `leftPred` side-1 fact rows, everything
-    * else is filtered out, exactly the union's contents. Disjointness
-    * is the caller's contract (a row matching both would union-tag
-    * TWICE but can one-scan-tag only once; for disjoint predicates
-    * the two frames are row-identical). */
   def asofOneSource(src: DataFrame, leftPred: Column, rightPred: Column,
                     key: String, leftId: String, rightId: String): DataFrame =
     asofCore(src.filter(leftPred || rightPred).select(
@@ -150,9 +122,9 @@ object RangeJoin {
       when(leftPred, col(leftId).cast("long")).as("_lid"),
       when(rightPred, col(rightId).cast("long")).as("_rid")), key)
 
-  /** The shared window core: one (key, ts)-sorted running `last
-    * ignoring nulls` over the tagged union — see [[asof]]'s doc for
-    * the semantics (side 0 sorts first, making equal-ts inclusive). */
+  /** [[asofOneSource]]'s window core over the side-tagged rows
+    * (`_side` 0 = dimension, 1 = fact; `_lid`/`_rid` the ids): one
+    * (key, ts, side)-sorted running `last ignoring nulls`. */
   private def asofCore(tagged: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(key).orderBy(col("ts_us"), col("_side"))
@@ -179,37 +151,14 @@ object RangeJoin {
     // from the events estimate; the window key is the uniform
     // synthetic user_id — no skew splitting to lose.
     val s = Tuned.sizedOneJob(s0, Tables.load(s0, dir, "events"))
-    Tables.registerAllOnce(s, dir)
-    // ONE-TEXT construction (r12, measured): the Dataset API
-    // analyzes eagerly per transformation, so the asofOneSource +
-    // select chain re-ran the analyzer ~8 times per bench rep —
-    // construction/planning INSIDE the timed region. One sql() text
-    // is a single analysis pass over the same logical plan. The SQL
-    // replays asofOneSource/asofCore exactly (one-scan disjoint
-    // side-tagging, side-0-sorts-first inclusive tie rule) — those
-    // remain the API faces for q49/q77 and genuinely two-frame
-    // callers; a semantic change THERE must be mirrored HERE.
-    // nested subqueries, NOT a WITH-CTE: the Bounded gate probes the
-    // ANALYZED plan, where a CTERelationRef reports the
-    // defaultSizeInBytes sentinel — a CTE here silently flips the
-    // gated tail onto the sampled range sort (measured: 1 job → 2).
-    s.sql("""
-      SELECT _lid AS purchase_id, _asof AS signup_id FROM (
-        SELECT _side, _lid,
-               last(_rid, true) OVER (
-                 PARTITION BY user_id ORDER BY ts_us, _side
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _asof
-        FROM (
-          SELECT user_id, unix_micros(ts) AS ts_us,
-                 CASE WHEN event_type = 'signup' THEN 0 ELSE 1 END AS _side,
-                 CASE WHEN event_type = 'purchase'
-                      THEN CAST(event_id AS BIGINT) END AS _lid,
-                 CASE WHEN event_type = 'signup'
-                      THEN CAST(event_id AS BIGINT) END AS _rid
-          FROM events
-          WHERE event_type = 'purchase' OR event_type = 'signup'))
-      WHERE _side = 1
-    """)
+    val ev = Tables.load(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("ts_us"))
+    asofOneSource(ev,
+      leftPred = col("event_type") === "purchase",
+      rightPred = col("event_type") === "signup",
+      key = "user_id", leftId = "event_id", rightId = "event_id")
+      .select(col("left_id").as("purchase_id"), col("right_id").as("signup_id"))
       // size-gated tail sort via the NARROW funnel (r12; was
       // orderedIfSmall): a WINDOW stage has no partial reduction, so
       // coalesce(1) above it folded the whole as-of window pass into
@@ -223,7 +172,7 @@ object RangeJoin {
   /** q49: as-of with a TOLERANCE bound (pandas merge_asof's
     * `tolerance`, the feature-staleness guard: a signup older than
     * 24 h must not be used as the feature row). A thin wrapper over
-    * [[asof]] — matches beyond the bound are nulled AFTER the window
+    * [[asofOneSource]] — matches beyond the bound are nulled AFTER the window
     * using the right timestamp asof already carries, so the
     * tolerance costs zero extra shuffles at any scale. */
   val q49AsofTolerance: Op = Op.sql("q49_asof_tolerance",
@@ -263,7 +212,7 @@ object RangeJoin {
     * = running `first` over the mirrored frame — sharing a single
     * shuffle (both frames have the same partition/order spec, so
     * they execute in one Window operator); no pair materialization
-    * at any skew, same cost envelope as [[asof]]. */
+    * at any skew, same cost envelope as [[asofOneSource]]. */
   def asofNearest(left: DataFrame, right: DataFrame, key: String,
                   leftId: String, rightId: String): DataFrame =
     asofNearestCore(

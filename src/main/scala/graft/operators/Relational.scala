@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Op
+import graft.plans.SqlOver
 import graft.sources.{Catalog, CsvSource, ManagedTables, Tables}
 
 /** §2.1 relational core: the reference's SQL executor surface
@@ -72,9 +73,9 @@ object Relational {
     // ONE-TEXT construction (r13, measured): the 7-aggregate Dataset
     // chain re-ran the eager analyzer per transformation — 0.068 s of
     // construction per bench rep (graft.Profile construct_s, the
-    // largest of the headline set); one sql() text is a single
-    // analysis pass over the same logical plan (the q10/q30/q31
-    // precedent). Expression notes preserved from the API chain:
+    // largest of the headline set); one SQL text bound through SqlOver
+    // is a single analysis pass over the same logical plan (as q10).
+    // Expression notes preserved from the API chain:
     //  - scale-4 disc product: cents(price) x cents(1-disc) are exact
     //    integer doubles (<=1e9 and <=100, product <=1e11 < 2^53), so
     //    it equals the decimal(12,2) product sum bit-for-bit;
@@ -85,8 +86,7 @@ object Relational {
     //    (SumScaledSpec pins equality with the decimal cast);
     //  - avg over the exact sum: one double division of two
     //    order-independent values, not an order-sensitive double avg.
-    Tables.registerAllOnce(s, dir)
-    s.sql("""
+    SqlOver(s, """
       SELECT l_returnflag, l_linestatus,
         CAST(graft_sum_scaled(l_quantity, 2) AS DOUBLE) AS sum_qty,
         CAST(graft_sum_scaled(l_extendedprice, 2) AS DOUBLE) AS sum_base_price,
@@ -101,7 +101,7 @@ object Relational {
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
       GROUP BY l_returnflag, l_linestatus
-    """)
+    """, "lineitem" -> t(s, dir, "lineitem"))
       // ≤ |returnflag|×|linestatus| = 6 groups: single-partition order
       // (Bounded), not a sampled range exchange over 6 rows
       .transform(Bounded.ordered(_, col("l_returnflag"), col("l_linestatus")))
@@ -255,16 +255,15 @@ object Relational {
     //
     // ONE-TEXT construction (r12, measured): the 5-join Dataset
     // chain re-ran the eager analyzer ~8 times per bench rep; one
-    // sql() text is a single analysis pass over the same logical
-    // plan. nation/region are fixed 25/5-row dims — always
-    // broadcastable (hinted, as broadcast() was); customer scales
+    // SQL text bound through SqlOver is a single analysis pass over
+    // the same logical plan. nation/region are fixed 25/5-row dims —
+    // always broadcastable (hinted, as broadcast() was); customer scales
     // with SF, so its join is left to the size threshold. The
     // scale-4 product of exact cent integers (see q1_agg's discProd,
     // incl. the floor-not-Round rationale) equals the oracle's
     // decimal(12,2) product sum bit-for-bit, summed in primitive
     // long via graft_sum_scaled.
-    Tables.registerAllOnce(s, dir)
-    s.sql("""
+    SqlOver(s, """
       SELECT /*+ BROADCAST(nation), BROADCAST(region) */ n_name,
              CAST(graft_sum_scaled(
                floor(l_extendedprice * 100 + 0.5) *
@@ -279,7 +278,8 @@ object Relational {
         AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
       GROUP BY n_name
-    """)
+    """, Seq("lineitem", "orders", "customer", "nation", "region")
+      .map(n => n -> t(s, dir, n)): _*)
       // ≤25 nation groups: single-partition order (Bounded)
       .transform(Bounded.ordered(_, col("revenue").desc, col("n_name")))
   }
@@ -320,34 +320,28 @@ object Relational {
       .orderBy("l_returnflag")
   }
 
-  val q14ScalarSubquery: Op = Op.sql("q14_scalar_subquery",
+  // One text for both engines: the oracle and, bound through SqlOver,
+  // the op itself (q14, q15, q32, q76).
+  private val q14Sql =
     """SELECT o_orderkey, o_totalprice,
       |  (SELECT min(o_totalprice) FROM orders) AS min_tp
       |FROM orders
       |WHERE o_totalprice >= (SELECT max(o_totalprice) FROM orders) * 0.9
-      |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(
-      """SELECT o_orderkey, o_totalprice,
-        |  (SELECT min(o_totalprice) FROM orders) AS min_tp
-        |FROM orders
-        |WHERE o_totalprice >= (SELECT max(o_totalprice) FROM orders) * 0.9
-        |ORDER BY o_orderkey""".stripMargin)
+      |ORDER BY o_orderkey""".stripMargin
+
+  val q14ScalarSubquery: Op = Op.sql("q14_scalar_subquery", q14Sql) { (s, dir) =>
+    SqlOver(s, q14Sql, "orders" -> t(s, dir, "orders"))
   }
 
-  val q15DerivedTable: Op = Op.sql("q15_derived_table",
+  private val q15Sql =
     """SELECT t2.c_custkey, t2.c_acctbal
       |FROM (SELECT t1.* FROM (SELECT * FROM customer WHERE c_acctbal > 0) t1
       |      WHERE t1.c_nationkey < 10) t2
       |WHERE t2.c_mktsegment = 'BUILDING'
-      |ORDER BY t2.c_custkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    s.sql(
-      """SELECT t2.c_custkey, t2.c_acctbal
-        |FROM (SELECT t1.* FROM (SELECT * FROM customer WHERE c_acctbal > 0) t1
-        |      WHERE t1.c_nationkey < 10) t2
-        |WHERE t2.c_mktsegment = 'BUILDING'
-        |ORDER BY t2.c_custkey""".stripMargin)
+      |ORDER BY t2.c_custkey""".stripMargin
+
+  val q15DerivedTable: Op = Op.sql("q15_derived_table", q15Sql) { (s, dir) =>
+    SqlOver(s, q15Sql, "customer" -> t(s, dir, "customer"))
   }
 
   val q16Expressions: Op = Op.sql("q16_expressions",
@@ -886,8 +880,7 @@ object Relational {
       |ORDER BY o_orderkey""".stripMargin
 
   val q32CorrelatedSubquery: Op = Op.sql("q32_correlated_subquery", q32Sql) { (s, dir) =>
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(q32Sql)
+    SqlOver(s, q32Sql, "orders" -> t(s, dir, "orders"))
   }
 
   /** Hot-key salted join ([[Skew.saltedJoin]]): result-identical to
@@ -1043,22 +1036,16 @@ object Relational {
     * DecorrelateInnerQuery), so the lateral SYNTAX costs nothing at
     * scale — one keyed shuffle on the correlation key, no
     * nested-loop. Same SQL text runs on both engines. */
-  val q76LateralTopn: Op = Op.sql("q76_lateral_topn",
+  private val q76Sql =
     """SELECT n.n_nationkey, t.c_custkey, t.c_acctbal
       |FROM nation n, LATERAL (
       |  SELECT c_custkey, c_acctbal FROM customer c
       |  WHERE c.c_nationkey = n.n_nationkey
       |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-      |ORDER BY n_nationkey, c_custkey""".stripMargin) { (s, dir) =>
-    t(s, dir, "nation").createOrReplaceTempView("nation")
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    s.sql(
-      """SELECT n.n_nationkey, t.c_custkey, t.c_acctbal
-        |FROM nation n, LATERAL (
-        |  SELECT c_custkey, c_acctbal FROM customer c
-        |  WHERE c.c_nationkey = n.n_nationkey
-        |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-        |ORDER BY n_nationkey, c_custkey""".stripMargin)
+      |ORDER BY n_nationkey, c_custkey""".stripMargin
+
+  val q76LateralTopn: Op = Op.sql("q76_lateral_topn", q76Sql) { (s, dir) =>
+    SqlOver(s, q76Sql, "nation" -> t(s, dir, "nation"), "customer" -> t(s, dir, "customer"))
   }
 
   val all: Seq[Op] = Seq(q1Agg, q2FilterProject, q3JoinInner, q4JoinLeft,

@@ -5,6 +5,7 @@ package graft.operators
 import org.apache.spark.sql.functions.col
 
 import graft.Op
+import graft.plans.SqlOver
 import graft.sources.Tables
 import graft.streaming.Streams
 
@@ -125,11 +126,10 @@ object Streaming {
     // tie-stable: equal timestamps always co-session whichever side
     // of the lag they land, and the cumulative sum's RANGE frame
     // gives tied rows one sid. OneTextParitySpec asserts this plan ==
-    // Streams.sessionize (the streaming face, which keeps the real
-    // session_window aggregate and its streaming spec) row for row —
-    // a semantic change THERE must be mirrored HERE.
-    Tables.registerAllOnce(s, dir)
-    s.sql("""
+    // Streams.sessionize row for row: the streaming face keeps the
+    // real session_window aggregate, the only session form
+    // Structured Streaming accepts.
+    SqlOver(s, """
       SELECT user_id, unix_micros(min(ts)) AS s_start,
              unix_micros(max(ts)) + 1800000000 AS s_end,
              count(1) AS n_events
@@ -145,7 +145,7 @@ object Streaming {
                       THEN 1 ELSE 0 END AS new_s
           FROM events))
       GROUP BY user_id, sid
-    """)
+    """, "events" -> Tables.load(s, dir, "events"))
       .transform(Bounded.orderedNarrowIfSmall(_, Bounded.SmallSortBytes,
         col("user_id"), col("s_start")))
   }

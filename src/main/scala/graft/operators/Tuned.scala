@@ -96,11 +96,6 @@ object Tuned {
     * serialize it (the Tuned.parallelCoalesce class of stages). */
   def sizedOneJob(parent: SparkSession, minPartitions: Int,
                   inputs: org.apache.spark.sql.DataFrame*): SparkSession = {
-    // measurement escape hatch: lets a bench A/B toggle the pin
-    // WITHOUT a recompile, so both variants run minutes apart on the
-    // same host state (the throttling sandbox makes cross-build
-    // comparisons unreliable). Never set outside A/B runs.
-    if (sys.env.get("GRAFT_DISABLE_SIZED_PIN").contains("1")) return parent
     val bytes = inputs
       .map(_.queryExecution.analyzed.stats.sizeInBytes *
         Bounded.DecompressionFactor).sum

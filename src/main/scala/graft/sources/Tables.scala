@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet star-schema source + registrar.
+/** Parquet star-schema source.
   *
   * Spark-first analog of the reference's storage scan path
   * (`query_engine/src/function/table/seq_table_scan.rs` +
@@ -70,30 +70,11 @@ object Tables {
     else df
   }
 
-  /** Register every table as a temp view (idempotent). */
+  /** Register every table as a temp view (idempotent). For the
+    * interactive entry points only (`GraftSession.open`, `Shell`),
+    * whose users query the tables by name. No operator registers
+    * views: SQL-text operators bind their relations through
+    * [[graft.plans.SqlOver]], so they never touch a session catalog. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  // registerAllOnce memo — the CURRENTLY-registered dir per session
-  // (r13, ADVICE r12): temp views are session-global, so a memo
-  // keyed by (session, dir) went stale the moment a different dir
-  // was registered on the same session — asking for dir A after
-  // registering dir B would skip re-registration and silently read
-  // B's data. Storing the one dir the views actually point at makes
-  // a dir switch re-register (and a repeat a no-op). Plan-only
-  // catalog state, so the memo holds no data.
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  /** [[registerAll]] memoized per session: ops that build their plan
-    * from ONE sql() text (r12) re-register views on every bench
-    * repetition otherwise — ten catalog commands inside the timed
-    * region. A different `dir` on the same session re-registers
-    * (views are repointed); `compute`'s per-key lock serializes
-    * concurrent registrations on one session. */
-  def registerAllOnce(spark: SparkSession, dir: String): Unit =
-    registered.compute(spark, (_, cur) => {
-      if (cur != dir) registerAll(spark, dir)
-      dir
-    })
 }

@@ -1,21 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.operators.RangeJoin
 import graft.sources.Tables
 import graft.streaming.Streams
 
-/** One-text ↔ API-face parity (r13, ADVICE r12): q30, q31 and
-  * stream_sessionize build their bench plan from ONE sql() text that
-  * replays the shared API faces (RangeJoin.withinGap,
-  * RangeJoin.asofOneSource/asofCore, Streams.sessionize) as literal
-  * SQL, guarded only by "must be mirrored" comments. A semantic
-  * change on either side would silently diverge results at scale
-  * while the small-SF oracle still passes — these tests run BOTH
-  * constructions on the same input and assert row-identical output,
-  * so the mirror comments are enforced, not trusted. */
+/** Batch-text ↔ streaming-face parity: stream_sessionize builds its
+  * batch plan from one SQL text (a lag/cumsum window bound through
+  * `graft.plans.SqlOver`), while its API face `Streams.sessionize`
+  * keeps the `session_window` aggregate, the only session form
+  * Structured Streaming accepts. The two constructions cannot share
+  * a builder, so this test runs both on the same input and asserts
+  * row-identical output. (q30 and q31 call their API faces directly
+  * and have no second plan to compare.) */
 class OneTextParitySpec extends SparkSuite {
 
   private def assertSameRows(sql: DataFrame, api: DataFrame): Unit = {
@@ -24,30 +21,6 @@ class OneTextParitySpec extends SparkSuite {
     assert(extra == 0 && missing == 0,
       s"one-text vs API-face diverged: $extra rows only in the sql() " +
         s"plan, $missing only in the API plan")
-  }
-
-  test("q30_range_join one-text SQL == withinGap API face") {
-    val op = SparkEntry.queries("q30_range_join")(spark, sfDir)
-    val ev = Tables.load(spark, sfDir, "events")
-      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"))
-    val api = RangeJoin.withinGap(ev, ev, 1000000L)
-      .filter(col("a.event_id") =!= col("b.event_id"))
-      .select(col("a.event_id").as("id_a"), col("b.event_id").as("id_b"))
-    assertSameRows(op, api)
-  }
-
-  test("q31_asof_join one-text SQL == asofOneSource API face") {
-    val op = SparkEntry.queries("q31_asof_join")(spark, sfDir)
-    val ev = Tables.load(spark, sfDir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("ts_us"))
-    val api = RangeJoin.asofOneSource(ev,
-        leftPred = col("event_type") === "purchase",
-        rightPred = col("event_type") === "signup",
-        key = "user_id", leftId = "event_id", rightId = "event_id")
-      .select(col("left_id").as("purchase_id"),
-        col("right_id").as("signup_id"))
-    assertSameRows(op, api)
   }
 
   test("stream_sessionize one-text SQL == Streams.sessionize API face") {
