@@ -17,9 +17,9 @@ package graft
 object AnnBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Env.num("SPARK_GRAFT_CPUS", "8")(_.toInt)
     val spark = graft.api.GraftSession
-      .builder("graft-ann-bench", s"local[$cpus]", Some(cpus.toInt))
+      .builder("graft-ann-bench", s"local[$cpus]", Some(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

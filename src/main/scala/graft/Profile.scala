@@ -30,9 +30,9 @@ object Profile {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q10_multi_join", "kv_range_scan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Env.num("SPARK_GRAFT_CPUS", "32")(_.toInt)
     val spark = graft.api.GraftSession
-      .builder("graft-profile", s"local[$cpus]", Some(cpus.toInt))
+      .builder("graft-profile", s"local[$cpus]", Some(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -100,7 +100,7 @@ object Profile {
     // behind it — a single priming run still carries one-time Janino
     // compiles in the "warm" number and misattributes them as
     // scheduler gaps
-    val warmups = sys.env.getOrElse("GRAFT_PROFILE_WARMUPS", "2").toInt
+    val warmups = Env.num("GRAFT_PROFILE_WARMUPS", "2")(_.toInt)
     def one(name: String, warm: Boolean): String = {
       if (!warm) { // cold pass primes codegen/JIT, untimed
         (1 to warmups).foreach(_ => drain(SparkEntry.queries(name)(spark, sfDir)))

@@ -29,9 +29,9 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Env.num("SPARK_GRAFT_CPUS", "4")(_.toInt)
     val spark = graft.api.GraftSession
-      .builder("graft-shell", s"local[$cpus]", Some(cpus.toInt))
+      .builder("graft-shell", s"local[$cpus]", Some(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.registerAll(spark, sfDir)

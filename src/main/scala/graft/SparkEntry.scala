@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Analytics, Dedup, KV, Layout, Multimodal, Pipeline, RangeJoin, Relational, Similarity, Sketches, Streaming, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Entry-point contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
   /** All implemented operators, one Op per SURVEY §2 row. */
   def ops: Seq[Op] = Relational.all ++ KV.all ++ Dedup.all ++

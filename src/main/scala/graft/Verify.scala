@@ -8,9 +8,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these query names (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Env.num("SPARK_GRAFT_CPUS", "4")(_.toInt)
     val spark = graft.api.GraftSession
-      .builder("graft-verify", s"local[$cpus]", Some(cpus.toInt))
+      .builder("graft-verify", s"local[$cpus]", Some(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -11,9 +11,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale notes (100 TB target): AQE on (runtime re-plan, skew-join
   * splitting, partition coalescing), broadcast threshold raised so all
-  * TPC-H-style dims broadcast, shuffle partitions sized for the local
-  * harness via `GRAFT_SHUFFLE_PARTITIONS` (on a real cluster this is
+  * TPC-H-style dims broadcast, shuffle partitions from the
+  * `shufflePartitions` argument, else 32 (on a real cluster this is
   * set to ~2-3x total cores or left to AQE).
+  *
+  * Every value the builder sets is a constant here; the builder reads
+  * no environment. A caller overrides any of them with its own
+  * `.config` on the returned builder, and an operator that needs other
+  * confs gets them on a session derived by `graft.operators.Tuned`.
   *
   * Codegen cache: every op runs as Janino-compiled whole-stage code,
   * and Spark keeps compiled classes in one JVM-wide cache sized by the
@@ -30,8 +35,7 @@ import org.apache.spark.sql.SparkSession
   * [[CodegenCacheEntries]] keeps that working set
   * resident with ample room per segment. `graft.plans.ParamLiterals`
   * keeps per-key KV reads from filling the larger cache with
-  * single-use classes. A caller's own `.config` on the returned
-  * builder overrides the value.
+  * single-use classes.
   */
 object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries` for every graft session:
@@ -46,30 +50,21 @@ object GraftSession {
       .master(master)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.map(_.toString)
-          .getOrElse(sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32")))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_ADAPTIVE", "true"))
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(32).toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       // Scan-split sizing (SURVEY §6/§8: size file partitions to the
-      // data). The defaults are the right call at the 100 TB target
-      // (~128 MB splits over thousands of files); on a small-SF
-      // harness whose files are single-digit MB they leave every scan
-      // on one core, so the bench harness can right-size them per
-      // layout via env without touching cluster defaults.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("GRAFT_MAX_PARTITION_BYTES", (128L << 20).toString))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("GRAFT_OPEN_COST_BYTES", (4L << 20).toString))
+      // data). Spark's defaults are the right call at the 100 TB
+      // target (~128 MB splits over thousands of files).
+      .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
+      .config("spark.sql.files.openCostInBytes", (4L << 20).toString)
       // Larger parquet reader batches amortize per-batch dispatch in
       // scan-bound aggregates (r9 lab: q1_agg −8%, measured at sf0.1).
       // 16k rows × 8 B × ~16 cols ≈ 2 MB per open batch — negligible
-      // against executor memory at any scale; env knob for re-tuning.
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        sys.env.getOrElse("GRAFT_READER_BATCH", "16384"))
+      // against executor memory at any scale.
+      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
       .config("spark.sql.session.timeZone", "UTC")
       // Parquet timestamp posture, pinned ONCE at session build (not
       // per-load — a loader mutating session confs is action-at-a-

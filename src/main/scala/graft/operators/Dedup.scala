@@ -430,9 +430,18 @@ object Dedup {
     // AQE off the static core-count partitioning serializes the
     // single-split checkpoint read into the join's 32-way exchange
     // and loses the coalesce right-sizing the verify stage depends
-    // on. The r12 parallel-coalesce pin (64 KB floor, AQE kept)
-    // remains the measured best shape.
-    val s = Tuned.parallelCoalesce(s0)
+    // on. The r12 parallel-coalesce pin remains the measured best
+    // shape: AQE kept fully on, but the post-shuffle COALESCE floor
+    // lowered from Spark's 1 MB default to 64 KB. With
+    // parallelismFirst coalescing (the default), AQE
+    // targets max(totalBytes/parallelism, minPartitionSize) — a
+    // 2-3 MB dashboard-scale shuffle coalesces to 1-2 partitions
+    // under the 1 MB floor, serializing a verify stage 32 cores could
+    // run in parallel. At cluster scale totalBytes/parallelism dwarfs
+    // either floor, so the knob only affects small shuffles (scale-
+    // neutral by construction).
+    val s = Tuned.derive(s0,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     // shuffle_hash: corpus-sized banded side must never broadcast

@@ -65,7 +65,7 @@ object KV {
     // scheduler job (Tuned). The KVTable.range API itself stays on
     // the caller's session with the runtime size gate: its bounds
     // are caller-controlled, the r9 contract.
-    kv(Tuned.boundedReduce(s), dir).range(lit(3L), lit(12L))
+    kv(Tuned.sizedOneJob(s), dir).range(lit(3L), lit(12L))
   }
 
   val kvCompact: Op = Op.sql("kv_compact",

@@ -245,11 +245,13 @@ object Layout {
     * into the fact scan as `might_contain(l_orderkey)` — the probe
     * side drops ~80% of rows BEFORE the join shuffle, which at 100 TB
     * is the difference between shuffling the whole fact table and
-    * shuffling only the keys that can match. Runs in an isolated
-    * `newSession` (broadcast disabled so the shuffle join qualifies —
-    * with a broadcastable dim Spark would rightly prefer BHJ and skip
-    * the filter; thresholds opened so test-SF sizes qualify) — the
-    * shared session's planner is never touched. PlanAuditSpec pins
+    * shuffling only the keys that can match. Runs on a session
+    * derived through [[Tuned.derive]] (broadcast disabled so the
+    * shuffle join qualifies — with a broadcastable dim Spark would
+    * rightly prefer BHJ and skip the filter; thresholds opened so
+    * test-SF sizes qualify). The caller's session is never touched,
+    * and the derived one is memoized, so repeated calls reuse its
+    * cached lineitem/orders relations. PlanAuditSpec pins
     * `might_contain` + bloom_filter_agg in the executed plan. */
   val q65RuntimeBloomJoin: Op = Op.sql("q65_runtime_bloom_join",
     """SELECT l_orderkey, count(*) AS n_items,
@@ -258,12 +260,12 @@ object Layout {
       |WHERE o_orderpriority = '1-URGENT'
       |  AND o_orderdate >= TIMESTAMP '1995-01-01'
       |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin) { (s, dir) =>
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1")
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+    val s2 = Tuned.derive(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
     val li = Tables.load(s2, dir, "lineitem")
     val o = Tables.load(s2, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT"

@@ -68,8 +68,9 @@ object Relational {
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s0, dir) =>
     // bounded-reduce pin (r12, measured): ≤6 output groups — the one
     // shuffle is a |groups|-row aggregate, so AQE's per-stage jobs
-    // buy nothing; Tuned.boundedReduce runs the query as ONE job
-    val s = Tuned.boundedReduce(s0)
+    // buy nothing; Tuned.sizedOneJob with no inputs (bounded by
+    // construction, so only its floor applies) runs it as ONE job
+    val s = Tuned.sizedOneJob(s0)
     // ONE-TEXT construction (r13, measured): the 7-aggregate Dataset
     // chain re-ran the eager analyzer per transformation — 0.068 s of
     // construction per bench rep (graft.Profile construct_s, the
@@ -458,7 +459,7 @@ object Relational {
     // bounded-reduce pin (r12): everything past the scan runs over
     // the ≤~500 literally-bounded rows, so the one repartition(1)
     // funnel needs no AQE service — ONE scheduler job (Tuned)
-    val s = Tuned.boundedReduce(s0)
+    val s = Tuned.sizedOneJob(s0)
     val byCust = Window.partitionBy("o_custkey")
     // `o_custkey < 50` is a LITERAL point predicate: ≤50 customers ×
     // ~10 orders each at ANY corpus size (TPC-H keeps orders/customer

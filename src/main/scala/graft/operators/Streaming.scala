@@ -66,7 +66,7 @@ object Streaming {
     // exchange + sampling job over a dashboard-sized aggregate.
     // bounded-reduce pin (r12): the one exchange is that
     // dashboard-sized aggregate — ONE scheduler job (Tuned)
-    val s = graft.operators.Tuned.boundedReduce(s0)
+    val s = Tuned.sizedOneJob(s0)
     Bounded.ordered(Streams.windowAgg(Tables.load(s, dir, "events")),
       col("win_start"), col("event_type"))
   }

@@ -1,49 +1,56 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-operator scheduling pin for FIXED-SHAPE, BOUNDED-OUTPUT
-  * queries (r12): under AQE every shuffle stage materializes as its
-  * own scheduler job — measured 30-50 ms of driver/scheduler constant
-  * per job at sf0.1 (PROFILE job timelines), which dominates
-  * dashboard-sized queries whose entire task time is <200 ms. For an
-  * op whose reduce side is provably bounded (a ≤|groups|-row
-  * aggregate behind Bounded.ordered), AQE's only remaining service —
-  * post-shuffle coalescing — is a no-op the plan already encodes, so
-  * the op runs on a derived session with AQE off and a small static
-  * shuffle-partition count: the whole query becomes ONE scheduler job
-  * (all stages submitted together), saving one job handoff + one AQE
-  * re-optimization per shuffle.
+/** The one place an operator gets a session with confs of its own.
   *
-  * NOT for corpus-sized shuffles: there AQE's runtime re-planning
-  * (skew splits, join-strategy switches, right-sizing) is the 100 TB
-  * safety net — those ops keep the parent session. This is the same
-  * measured-pin discipline as largeSmallStar's loop (r11/r12) and the
-  * q65 isolated-session precedent.
+  * [[derive]] is the mechanism: a child of the caller's session with
+  * the given confs set, memoized per (parent, conf set). Nothing on
+  * the caller's session is ever mutated, so a concurrent caller keeps
+  * its own confs (the ADVICE r11 isolation rule), and one conf set on
+  * one parent is one SessionState per JVM, so
+  * [[graft.sources.Tables]]' per-session relation cache stays warm
+  * across calls. Operators never call `newSession` themselves.
   *
-  * The derived session is memoized per parent (same pattern and
-  * lifetime as [[graft.sources.Tables]]' plan cache): one
-  * SessionState per JVM, Tables' per-session relation cache stays
-  * warm, and NOTHING on the caller's session is mutated — a
-  * concurrent caller keeps AQE (the ADVICE r11 isolation rule).
+  * [[sizedOneJob]] is the one scheduling policy on top of it: AQE off
+  * and a static shuffle-partition count derived from the op's input-
+  * size estimate. Ops whose shape needs other confs (q65's runtime
+  * bloom filter, dedup_embedding's coalesce floor) pass them to
+  * [[derive]] at their call site, with the measurement that chose
+  * them.
+  *
+  * Lifetime: the memo holds its parents strongly, as Tables' cache
+  * does; weak keys would free nothing while Tables' cached relations
+  * pin the same sessions.
   */
 object Tuned {
   // Keyed on the parent SparkSession OBJECT (r13, ADVICE r12):
   // SparkSession does not override equals, so map equality is
-  // identity — collision-free, unlike the identityHashCode int key
+  // identity — collision-free, unlike an identityHashCode int key
   // under which two live parents colliding would share a derived
-  // session (wrong conf) silently.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private val cacheMin =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private val cacheSized =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), SparkSession]()
+  // session (wrong conf) silently. The conf set is a Map, so the
+  // order the confs are passed in does not matter.
+  private val derived =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Map[String, String]), SparkSession]()
+
+  /** A child session of `parent` with `confs` set, memoized per
+    * (parent, conf set). The parent is never mutated. */
+  def derive(parent: SparkSession, confs: (String, String)*): SparkSession =
+    derived.computeIfAbsent((parent, confs.toMap), { case (_, set) =>
+      val s = parent.newSession()
+      set.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    })
 
   /** Shuffle-partition target for [[sizedOneJob]]: the same
     * 64 MB/partition advisory AQE coalesces toward — the static
     * sizing reproduces AQE's outcome without AQE's per-stage jobs. */
   private val SizedPartitionBytes = BigInt(64L << 20)
+
+  /** Local partition floor of [[sizedOneJob]]: enough to spread a
+    * bounded reduce, few enough that task-launch overhead stays
+    * under one job handoff even on a 32-core local harness. */
+  val PinnedShufflePartitions = 8
 
   /** AQE-off one-job session with SIZE-DERIVED static shuffle
     * partitions (r12, VERDICT r11 task 1's "measured per-query
@@ -61,7 +68,7 @@ object Tuned {
     *    frames (file sizes folded through the plan, <1 ms, no job —
     *    the Bounded gate's machinery) times the parquet
     *    decompression factor, at AQE's own 64 MB/partition advisory
-    *    target, floored at min([[PinnedShufflePartitions]] = 8,
+    *    target, floored at min([[PinnedShufflePartitions]],
     *    defaultParallelism) in the default overload (see the local-
     *    floor comment in the body: a core-count fan-out on sub-MB
     *    shuffles just multiplies task-launch constants) — callers
@@ -72,6 +79,11 @@ object Tuned {
     *    exactly what AQE's coalescing would produce.
     *    NOT a local[32] constant (the r12 rule): the count scales
     *    with the input estimate and the harness core count.
+    *  - no inputs: the op's reduce is bounded by construction (q1's
+    *    ≤6 groups, a literal 10-key KV range, an hours×types report),
+    *    so only the floor applies. Passing such an op's input frames
+    *    would size its partition count from the corpus (2^20
+    *    partitions for 6 groups at 100 TB), so those ops pass none.
     *  - join strategy: the ops pinned here either hint their joins
     *    (shuffle_hash for corpus-sized banded sides) or join
     *    broadcast-safe dims; the static planner keeps the
@@ -81,21 +93,17 @@ object Tuned {
     *  - what is genuinely LOST is runtime skew-splitting; callers
     *    must be ops whose shuffle keys are structurally low-skew
     *    (time bins, uniform synthetic ids, banded signatures) —
-    *    documented per call site.
-    *
-    * Derived-session isolation (ADVICE r11): parent session is never
-    * mutated; memoized per (parent, partition count) so the Tables
-    * relation cache stays warm across bench repetitions. */
-  def sizedOneJob(parent: SparkSession,
-                  inputs: org.apache.spark.sql.DataFrame*): SparkSession =
+    *    documented per call site. Corpus-sized shuffles with skew
+    *    keep the parent session and AQE, the 100 TB safety net. */
+  def sizedOneJob(parent: SparkSession, inputs: DataFrame*): SparkSession =
     sizedOneJob(parent, PinnedShufflePartitions, inputs: _*)
 
   /** [[sizedOneJob]] with an explicit local partition floor — pass
     * the session core count when the pinned op's post-shuffle
     * per-row work is heavy enough that a reduced local fan-out would
-    * serialize it (the Tuned.parallelCoalesce class of stages). */
+    * serialize it. */
   def sizedOneJob(parent: SparkSession, minPartitions: Int,
-                  inputs: org.apache.spark.sql.DataFrame*): SparkSession = {
+                  inputs: DataFrame*): SparkSession = {
     val bytes = inputs
       .map(_.queryExecution.analyzed.stats.sizeInBytes *
         Bounded.DecompressionFactor).sum
@@ -117,41 +125,7 @@ object Tuned {
       case h if h == raw => raw
       case h => h << 1
     }
-    cacheSized.computeIfAbsent((parent, n), _ => {
-      val s = parent.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      s
-    })
+    derive(parent, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> n.toString)
   }
-
-  /** AQE kept fully on, but the post-shuffle COALESCE floor lowered
-    * from Spark's 1 MB default to 64 KB: with parallelismFirst
-    * coalescing (the default), AQE targets
-    * max(totalBytes/parallelism, minPartitionSize) — a 2-3 MB
-    * dashboard-scale shuffle coalesces to 1-2 partitions under the
-    * 1 MB floor, serializing a window/agg stage 32 cores could run in
-    * parallel. At cluster scale totalBytes/parallelism dwarfs either
-    * floor, so the knob only affects small shuffles (scale-neutral by
-    * construction). Derived-session isolation as [[boundedReduce]]. */
-  def parallelCoalesce(parent: SparkSession): SparkSession =
-    cacheMin.computeIfAbsent(parent, _ => {
-      val s = parent.newSession()
-      s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
-      s
-    })
-
-  /** Shuffle partitions for the pinned ops: enough to spread a
-    * bounded reduce, few enough that task-launch overhead stays
-    * under one job handoff even on a 32-core local harness. */
-  val PinnedShufflePartitions = 8
-
-  def boundedReduce(parent: SparkSession): SparkSession =
-    cache.computeIfAbsent(parent, _ => {
-      val s = parent.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions",
-        PinnedShufflePartitions.toString)
-      s
-    })
 }

@@ -32,7 +32,7 @@ class CsvSourceSpec extends SparkSuite {
   }
 
   test("malformed rows: DROPMALFORMED drops exactly the planted rows, keeps all clean") {
-    val path = "/root/repo/target/graft_csv/nation_bad_spec.csv"
+    val path = "target/graft_csv/nation_bad_spec.csv"
     val bad = CsvSource.materializeNationCsvWithErrors(spark, sfDir, path)
     assert(bad > 0, "fixture planted no bad rows")
     val clean = graft.sources.Tables.load(spark, sfDir, "nation").count()

@@ -8,7 +8,7 @@ import graft.sources.ManagedTables
   * tests/slt/create_table.slt + insert_table.slt). */
 class ManagedTablesSpec extends SparkSuite {
 
-  private val wh = "/root/repo/target/test_warehouse"
+  private val wh = "target/test_warehouse"
   private val schema = StructType(Seq(
     StructField("k", LongType), StructField("s", StringType)))
 

@@ -74,9 +74,22 @@ class OpIsolationSpec extends SparkSuite {
         Tuned.sizedOneJob(caller, events),
         Tuned.sizedOneJob(caller, caller.sparkContext.defaultParallelism, events))
     }
-    for (s <- caller +: Tuned.boundedReduce(caller) +: derived.distinct)
+    for (s <- caller +: Tuned.sizedOneJob(caller) +: derived.distinct)
       assert(tempViews(s).isEmpty, s"temp views left on a session: ${tempViews(s)}")
     LocalDir.deleteRecursively(new File(dirB.toString))
+  }
+
+  test("q65 reuses one derived session per caller and leaves the caller's confs alone") {
+    val caller = spark.newSession()
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled")
+    val before = keys.map(caller.conf.get)
+    val q65 = SparkEntry.queries("q65_runtime_bloom_join")
+    val (a, b) = (q65(caller, sfDir), q65(caller, sfDir))
+    assert(a.sparkSession eq b.sparkSession,
+      "each construction of q65 built a session of its own")
+    assert(!(a.sparkSession eq caller), "q65 ran on the caller's own session")
+    assert(keys.map(caller.conf.get) == before, "q65 changed the caller's confs")
   }
 
   test("SqlOver binds only the relations it is given, never the session catalog") {

@@ -2,7 +2,7 @@
 # Run graft.Bench in a bare JVM (no sbt) so the harness's own launch
 # CPU doesn't pollute loadavg_start or compete with the measured runs.
 # Mirrors build.sbt's forked javaOptions.
-cd /root/repo
+cd "$(dirname "$0")/.."
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
