@@ -1,6 +1,11 @@
 package graft.sources
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Parquet star-schema source.
   *
@@ -11,20 +16,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vectorized columnar scan with predicate pushdown and column
   * pruning for free (the reference implements those as optimizer
   * rules `column_pruning.rs` / `pushdown_predicates.rs`).
+  *
+  * A table's snapshot is its directory mtime, read on every [[load]]:
+  * one analyzed relation is cached per (session, path) and replaced
+  * when the mtime changes. The same stamp keys `graft.Op`'s prepared
+  * plans, which [[recording]] serves. A replaced relation stays
+  * reachable from every prepared plan built over it until that op is
+  * called again on the same (session, dir) and rebuilds. Relations
+  * are built with [[SnapshotParquetFormat]], which reuses each scan
+  * shape's Parquet reader across queries.
   */
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Analyzed-DataFrame cache, keyed by (session, path, dir mtime).
+  /** One loaded table: the directory mtime it was read at and the
+    * analyzed DataFrame. */
+  private final case class Loaded(mtime: Long, df: DataFrame)
+
+  // Analyzed-DataFrame cache, one entry per (session, path).
   // `spark.read.parquet` pays a file listing + a parquet footer
   // schema read EVERY call — measured ~0.3 s of the 0.74 s wall for
   // the 5-table q10 at sf0.1 (target/profile.json), and a real
   // per-query driver cost on a 100 TB table with 10^5 files. A
   // long-running engine lists a table once and replans from the
-  // cached relation; the mtime in the key keeps the cache honest if
-  // the table is rewritten between calls. Bounded: |dirs|x|tables|
-  // analyzed plans, no data — plan-only, so executors hold nothing.
+  // cached relation. Each call reads the directory's mtime; when it
+  // differs from the entry's, the table was rewritten, and the entry
+  // is REPLACED by a fresh load, so a rewritten table's old relation
+  // (and its stale file index) is not pinned for the life of the JVM.
+  // Bounded: |sessions|x|dirs|x|tables| analyzed plans, no data —
+  // plan-only, so executors hold nothing.
   // Keyed on the SparkSession OBJECT (r13, ADVICE r12):
   // SparkSession does not override equals, so map equality is
   // identity — collision-free, unlike the identityHashCode int key
@@ -32,18 +53,58 @@ object Tables {
   // reference pins nothing new: the cached DataFrames already hold
   // their session.
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Loaded]()
+
+  /** The snapshot stamp of a table directory: its mtime in ms, or -1
+    * if it cannot be read. [[load]] and the prepared-plan memo in
+    * [[graft.Op]] compare the same stamp. */
+  private[graft] def stamp(path: String): Long =
+    try java.nio.file.Files.getLastModifiedTime(
+      java.nio.file.Paths.get(path)).toMillis
+    catch { case _: Throwable => -1L }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val mtime =
-      try java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(path)).toMillis
-      catch { case _: Throwable => -1L }
-    cache.computeIfAbsent(
-      (spark, path, mtime),
-      _ => loadUncached(spark, dir, name))
+    val mtime = stamp(path)
+    // a hit takes no lock; only a miss or a stale entry computes
+    val hit = cache.get((spark, path))
+    val df =
+      if (hit != null && hit.mtime == mtime) hit.df
+      else cache.compute((spark, path), (_, old) =>
+        if (old != null && old.mtime == mtime) old
+        else Loaded(mtime, loadUncached(spark, dir, name))).df
+    val loads = recorder.get
+    if (loads != null)
+      loads += Load(path, mtime, df.queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.orNull)
+    df
   }
+
+  /** One [[load]] seen by [[recording]]: the path, the stamp it was
+    * read at and the file relation it returned. */
+  private[graft] final case class Load(path: String, stamp: Long, relation: BaseRelation)
+
+  // the loads made by the current thread inside [[recording]]; null
+  // outside it
+  private val recorder = new ThreadLocal[mutable.ArrayBuffer[Load]]
+
+  /** Runs `body` and returns its value with every [[load]] made during
+    * it on this thread. Not nested: `graft.Op` builds an op called
+    * inside another's construction without recording. */
+  private[graft] def recording[T](body: => T): (T, Seq[Load]) = {
+    val mine = mutable.ArrayBuffer[Load]()
+    recorder.set(mine)
+    try (body, mine.toSeq)
+    finally recorder.remove()
+  }
+
+  /** Whether the current thread is inside [[recording]]. */
+  private[graft] def isRecording: Boolean = recorder.get != null
+
+  /** Number of cached loads of `path`, over all sessions. */
+  private[graft] def cachedLoads(path: String): Int =
+    cache.keySet().asScala.count(_._2 == path)
 
   private def loadUncached(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp columns arrive in whichever physical form the data
@@ -61,7 +122,10 @@ object Tables {
     //    nanos as long (legacy.parquet.nanosAsLong, same session pin),
     //    truncate with integer `div` (not `/`: double division rounds
     //    at 1e18-scale nanos where DuckDB truncates).
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    // Read through [[SnapshotParquetFormat]], which reuses each scan
+    // shape's reader (and its broadcast Hadoop conf) across queries.
+    val df = spark.read.format(classOf[SnapshotParquetFormat].getName)
+      .load(s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
       // legacy nanos layout: surface a microsecond-truncated timestamp

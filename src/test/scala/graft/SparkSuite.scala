@@ -44,6 +44,33 @@ final class ChunkStamper(dir: String) {
 }
 
 object SparkSuite {
+  /** Copies every table of `from` into a fresh `to`, for specs that
+    * rewrite tables. */
+  def copyTables(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    graft.sources.LocalDir.deleteRecursively(to.toFile)
+    java.nio.file.Files.createDirectories(to)
+    graft.sources.Tables.all.foreach { t =>
+      val src = from.resolve(s"$t.parquet")
+      val walk = java.nio.file.Files.walk(src)
+      try walk.iterator().asScala.foreach(p => java.nio.file.Files.copy(p,
+        to.resolve(s"$t.parquet").resolve(src.relativize(p).toString)))
+      finally walk.close()
+    }
+  }
+
+  /** Overwrites table `name` in `dir` with `f` of its current rows,
+    * collected first so the write does not read the files it
+    * replaces. */
+  def rewrite(spark: SparkSession, dir: String, name: String)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val path = s"$dir/$name.parquet"
+    val cur = spark.read.parquet(path)
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(cur.collect(): _*), cur.schema)
+    f(local).write.mode("overwrite").parquet(path)
+  }
+
   /** The test data directory, shared by every spec (incl. the
     * session-free OracleTypeLintSpec — one knob, no drift). */
   val sfDirDefault: String =
