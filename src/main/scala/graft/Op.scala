@@ -20,9 +20,9 @@ import graft.sources.Tables
   * prepares once per table snapshot and executes per call. Its memo
   * holds, per (caller session, dir), the ANALYZED plan a construction
   * returned, with the session it returned (a `Tuned`-derived one, if
-  * any), the caller's SQL confs and the stamps of the tables it
-  * loaded. A call whose confs and stamps still match gets
-  * `Datasets.ofRows(session, analyzed)`: a fresh QueryExecution, so it
+  * any), the caller's SQL confs, that session's SQL confs and the
+  * stamps of the tables it loaded. A call whose confs and stamps still
+  * match gets `Datasets.ofRows(session, analyzed)`: a fresh QueryExecution, so it
   * still optimizes, plans and executes. Nothing executed is ever
   * reused: no RDD, shuffle, broadcast relation or result.
   *
@@ -36,7 +36,9 @@ import graft.sources.Tables
   * are those of every table the construction loaded: the directory
   * mtimes `Tables.load` reads, so the memo sees a rewrite exactly when
   * `Tables.load` does. A changed stamp or conf rebuilds and replaces
-  * the entry: one entry per key. Seeds drawn at analysis (`uuid()`,
+  * the entry: one entry per key. Ops can share a derived session that
+  * each construction re-syncs to the caller (`Tuned.derive`), hence
+  * the session's own confs. Seeds drawn at analysis (`uuid()`,
   * `shuffle()`) repeat across the calls that share a plan.
   *
   * The job check reads the context's global job counter, so a job
@@ -63,7 +65,7 @@ final case class Op(
     else {
       val confs = spark.conf.getAll
       val p = prepared.get((spark, dir))
-      if (p != null && p.confs == confs &&
+      if (p != null && p.confs == confs && p.session.conf.getAll == p.sessionConfs &&
           p.stamps.forall { case (path, m) => Tables.stamp(path) == m })
         Datasets.ofRows(p.session, p.analyzed)
       else prepare(spark, dir, confs)
@@ -79,7 +81,8 @@ final case class Op(
     if (Jobs.submitted(spark.sparkContext) == jobs &&
         stamps.map(_._1).distinct.size == stamps.size &&
         Op.covered(analyzed, loads.map(_.relation)))
-      prepared.put((spark, dir), Op.Prepared(analyzed, df.sparkSession, confs, stamps.toMap))
+      prepared.put((spark, dir), Op.Prepared(analyzed, df.sparkSession, confs,
+        df.sparkSession.conf.getAll, stamps.toMap))
     else prepared.remove((spark, dir))
     df
   }
@@ -96,7 +99,8 @@ object Op {
     Op(name, build, None)
 
   private final case class Prepared(analyzed: LogicalPlan, session: SparkSession,
-                                    confs: Map[String, String], stamps: Map[String, Long])
+                                    confs: Map[String, String], sessionConfs: Map[String, String],
+                                    stamps: Map[String, Long])
 
   /** Whether every leaf of `plan`, subqueries included, is one of the
     * `loaded` relations (compared by identity) or needs no stamp (see

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Op
 import graft.kv.{KVLog, KVTable, Wal}
-import graft.sources.Tables
+import graft.sources.{LocalDir, State, Tables}
 
 /** §2.2 KV storage semantics as oracle-checked operators.
   *
@@ -224,15 +224,6 @@ object KV {
     t.mergedWithRangeDeletes(rts).orderBy("key")
   }
 
-  private val logBuildLock = new Object
-
-  /** Durable batched ingest through [[graft.kv.KVLog]] (the
-    * reference's WAL write path, wal_record_writer.rs): the log is
-    * split into three seq-range batches, each appended as a
-    * crash-safe bloom-filtered run (temp dir + atomic rename), and
-    * the read-back merge must equal the full-log merge — which is
-    * exactly the DuckDB oracle. Built once per (dir, mtime) like the
-    * ANN indexes; re-runs read the committed runs. */
   /** Column families sharing ONE sequence space (RocksDB CFs; the
     * reference's version_set has a single seq domain —
     * storage_engine/src/manager/version_set.rs — which is exactly
@@ -272,13 +263,6 @@ object KV {
     fam("default", 0).unionAll(fam("meta", 1)).orderBy("cf", "key")
   }
 
-  /** The three-batch ingest log for a dataset, built once per (dir,
-    * mtime) — shared by kv_log_ingest (which reads it back) and
-    * kv_checkpoint_restore (which checkpoints it). Tag = readable
-    * sanitized dir + full MD5 of the raw path: the sanitized form
-    * alone is not injective (same hazard and fix as
-    * Similarity.ivfIndexPath), so colliding datasets with equal
-    * mtimes could otherwise share a log dir and serve wrong runs. */
   /** The three seq-range ingest batches of the derived log — one
     * derivation shared by the ingest build and the backup op's
     * staged timeline. */
@@ -290,19 +274,20 @@ object KV {
       t.runs.filter(col("seq") > c2))
   }
 
-  private def logTag(dir: String): String = {
-    val mtime = new java.io.File(s"$dir/events.parquet").lastModified()
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${tag}_${digest}_$mtime"
-  }
+  /** Format of the KV artefacts' generations ([[State.artifact]]):
+    * bump it whenever a build changes what their files mean. */
+  private val ArtifactFormat = "1"
 
-  private def ingestLog(s: SparkSession, dir: String): KVLog = {
-    val t = kv(s, dir)
-    val log = KVLog(s"/root/repo/target/graft_kvlog/${logTag(dir)}",
-      "key", "seq", "tombstone")
-    logBuildLock.synchronized {
+  private def runLog(path: String): KVLog = KVLog(path, "key", "seq", "tombstone")
+
+  /** The ingest log of a dataset's current `events` snapshot, at
+    * `<generation>/log`, and with `checkpointed` its checkpoint at
+    * `<generation>/ckpt` — shared by kv_log_ingest (which reads the log
+    * back) and kv_checkpoint_restore (which checkpoints it). Returns the
+    * generation. */
+  private def ingestLog(s: SparkSession, dir: String, checkpointed: Boolean): String =
+    State.artifact("kvlog", dir, "events", ArtifactFormat) { gen =>
+      val log = runLog(s"$gen/log")
       // completeness = the run COUNT, not non-emptiness: each append
       // commits durably on its own, so a build killed between appends
       // leaves 1-2 committed runs — treating that as "built" would
@@ -311,16 +296,30 @@ object KV {
       // policy as the _SUCCESS-gated ANN indexes).
       if (log.committedRuns.size != 3) {
         log.reset()
-        seqBatches(t).foreach(log.append)
+        seqBatches(kv(s, dir)).foreach(log.append)
+      }
+      if (checkpointed) {
+        // rebuild the checkpoint only when missing or short: the
+        // manifest gate makes a half-built one invisible
+        val ok = try {
+          KVLog.openCheckpoint(s"$gen/ckpt", "key", "seq", "tombstone")
+            .committedRuns.size == log.committedRuns.size
+        } catch { case _: IllegalArgumentException => false }
+        if (!ok) log.checkpointTo(s"$gen/ckpt")
       }
     }
-    log
-  }
 
+  /** Durable batched ingest through [[graft.kv.KVLog]] (the
+    * reference's WAL write path, wal_record_writer.rs): the log is
+    * split into three seq-range batches, each appended as a
+    * crash-safe bloom-filtered run (temp dir + atomic rename), and
+    * the read-back merge must equal the full-log merge — which is
+    * exactly the DuckDB oracle. Built once per snapshot like the
+    * ANN indexes; re-runs read the committed runs. */
   val kvLogIngest: Op = Op.sql("kv_log_ingest",
     s"""WITH $kvCte
        |SELECT * FROM ${mergeSql("kv")} ORDER BY key""".stripMargin) { (s, dir) =>
-    ingestLog(s, dir).merged(s).orderBy("key")
+    runLog(s"${ingestLog(s, dir, checkpointed = false)}/log").merged(s).orderBy("key")
   }
 
   /** Checkpoint/restore of the live log (the reference's
@@ -337,19 +336,8 @@ object KV {
   val kvCheckpointRestore: Op = Op.sql("kv_checkpoint_restore",
     s"""WITH $kvCte
        |SELECT * FROM ${mergeSql("kv")} ORDER BY key""".stripMargin) { (s, dir) =>
-    val log = ingestLog(s, dir)
-    val ckptPath = log.path + "_ckpt"
-    logBuildLock.synchronized {
-      // rebuild the checkpoint only when missing or stale: the
-      // manifest gate makes a half-built one invisible, and the
-      // path is (dir, mtime)-keyed like the log itself
-      val ok = try {
-        KVLog.openCheckpoint(ckptPath, "key", "seq", "tombstone")
-          .committedRuns.size == log.committedRuns.size
-      } catch { case _: IllegalArgumentException => false }
-      if (!ok) log.checkpointTo(ckptPath)
-    }
-    KVLog.openCheckpoint(ckptPath, "key", "seq", "tombstone")
+    val gen = ingestLog(s, dir, checkpointed = true)
+    KVLog.openCheckpoint(s"$gen/ckpt", "key", "seq", "tombstone")
       .merged(s).orderBy("key")
   }
 
@@ -373,31 +361,29 @@ object KV {
       .merged().orderBy("key")
   }
 
-  /** The staged full+incremental backup pair for a dataset, built
-    * once per (dir, mtime): a fresh 2-run log → full checkpoint →
-    * third batch appended → incremental checkpoint. Public so
-    * KVLogSpec can inspect the physical chain. */
+  /** The staged full+incremental backup pair of a dataset's current
+    * `events` snapshot, one generation holding `src/`, `full/` and
+    * `inc/`: a fresh 2-run log → full checkpoint → third batch
+    * appended → incremental checkpoint. Public so KVLogSpec can
+    * inspect the physical chain. */
   def backupChain(s: SparkSession, dir: String): (String, String) = {
-    val staged = KVLog(s"/root/repo/target/graft_kvbk/${logTag(dir)}_src",
-      "key", "seq", "tombstone")
-    val fullPath = s"/root/repo/target/graft_kvbk/${logTag(dir)}_full"
-    val incPath = s"/root/repo/target/graft_kvbk/${logTag(dir)}_inc"
-    logBuildLock.synchronized {
-      val ok = try KVLog.chainRuns(incPath).size == 3
+    val gen = State.artifact("kvbk", dir, "events", ArtifactFormat) { gen =>
+      val ok = try KVLog.chainRuns(s"$gen/inc").size == 3
                catch { case _: Exception => false }
       if (!ok) {
+        val staged = runLog(s"$gen/src")
         staged.reset()
-        graft.sources.LocalDir.deleteRecursively(new java.io.File(fullPath))
-        graft.sources.LocalDir.deleteRecursively(new java.io.File(incPath))
+        LocalDir.deleteRecursively(new java.io.File(s"$gen/full"))
+        LocalDir.deleteRecursively(new java.io.File(s"$gen/inc"))
         val batches = seqBatches(kv(s, dir))
         staged.append(batches(0))
         staged.append(batches(1))
-        staged.checkpointTo(fullPath) // T0: full backup
+        staged.checkpointTo(s"$gen/full") // T0: full backup
         staged.append(batches(2)) // T1: new data arrives
-        staged.incrementalCheckpointTo(incPath, fullPath)
+        staged.incrementalCheckpointTo(s"$gen/inc", s"$gen/full")
       }
     }
-    (fullPath, incPath)
+    (s"$gen/full", s"$gen/inc")
   }
 
   /** Secondary index on the VALUE column (RocksDB-style derived
@@ -429,25 +415,17 @@ object KV {
       .orderBy("key")
   }
 
-  /** The value-sorted index materialization for a dataset, built once
-    * per (dir, mtime) behind a `_SUCCESS` gate. Public: KVSpec audits
-    * the pushed predicate on this exact path. */
-  def valueIndexPath(s: SparkSession, dir: String): String = {
-    val mtime = new java.io.File(s"$dir/events.parquet").lastModified()
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"/root/repo/target/graft_kvidx/${tag}_${digest}_$mtime"
-    logBuildLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
+  /** The value-sorted index materialization of a dataset's current
+    * `events` snapshot, built behind a `_SUCCESS` gate. Public: KVSpec
+    * audits the pushed predicate on this exact path. */
+  def valueIndexPath(s: SparkSession, dir: String): String =
+    State.artifact("kvidx", dir, "events", ArtifactFormat) { path =>
+      if (!new java.io.File(s"$path/_SUCCESS").exists())
         kv(s, dir).merged()
           .repartitionByRange(8, col("v"))
           .sortWithinPartitions("v")
           .write.mode("overwrite").parquet(path)
-      }
     }
-    path
-  }
 
   /** SCD type-2 dimension build — the warehouse face of the KV
     * version history (reference: version_set keeps every seq'd value;

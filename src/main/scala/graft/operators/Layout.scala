@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{State, Tables}
 
 /** §2.1+ physical-layout operators: the two storage decisions that
   * dominate 100 TB plans — bucketing (co-located joins: pay the
@@ -21,8 +21,8 @@ import graft.sources.Tables
   */
 object Layout {
 
-  private val BucketedWh = "/root/repo/target/graft_bucketed"
-  private val PartPath = "/root/repo/target/graft_events_part"
+  private val BucketedWh = s"${State.Root}/graft_bucketed"
+  private val PartPath = s"${State.Root}/graft_events_part"
   val Buckets = 8
 
   /** Both join sides written bucketed (same bucket count, bucket col
@@ -72,7 +72,7 @@ object Layout {
       .orderBy("event_type")
   }
 
-  val ZorderPath = "/root/repo/target/graft_orders_zorder"
+  val ZorderPath = s"${State.Root}/graft_orders_zorder"
 
   /** 16-bit Morton spread (bits of `c` interleaved with zeros), the
     * classic mask cascade — pure codegen'd integer ops. */
@@ -135,8 +135,8 @@ object Layout {
       .sortWithinPartitions("z")
       .write.mode("overwrite").parquet(ZorderPath)
 
-  val SmallFilesPath = "/root/repo/target/graft_events_small"
-  val CompactedPath = "/root/repo/target/graft_events_compacted"
+  val SmallFilesPath = s"${State.Root}/graft_events_small"
+  val CompactedPath = s"${State.Root}/graft_events_compacted"
   val FragmentFiles = 64
   val TargetFileBytes = 1L << 20 // 1 MiB at test SF; 128 MiB in production
 
@@ -320,7 +320,7 @@ object Layout {
       "min_value", "max_value", "table_rows").orderBy("col_name")
   }
 
-  private val PevoPath = "/root/repo/target/graft_events_pevo"
+  private val PevoPath = s"${State.Root}/graft_events_pevo"
 
   /** PARTITION EVOLUTION — changing a table's partition scheme
     * WITHOUT rewriting history (the Iceberg marquee feature; Hive
@@ -369,7 +369,7 @@ object Layout {
     g1.unionByName(g2).orderBy("event_id")
   }
 
-  val ZonemapPath = "/root/repo/target/graft_zonemap"
+  val ZonemapPath = s"${State.Root}/graft_zonemap"
 
   /** ZONEMAP SKIPPING from REAL parquet footers (round 12 — the
     * mechanism under every "files skipped" counter: per-file min/max

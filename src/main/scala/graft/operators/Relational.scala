@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Op
 import graft.plans.SqlOver
-import graft.sources.{Catalog, CsvSource, ManagedTables, Tables}
+import graft.sources.{Catalog, CsvSource, ManagedTables, State, Tables}
 
 /** §2.1 relational core: the reference's SQL executor surface
   * (`/root/reference/src/query_engine/src/execution/volcano_executor`,
@@ -718,7 +718,7 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
-  private val csvPath = "/root/repo/target/graft_csv/nation.csv"
+  private val csvPath = s"${State.Root}/graft_csv/nation.csv"
 
   val q24ReadCsv: Op = Op.sql("q24_read_csv",
     s"""SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
@@ -732,7 +732,7 @@ object Relational {
       .orderBy("n_nationkey")
   }
 
-  private val badCsvPath = "/root/repo/target/graft_csv/nation_bad.csv"
+  private val badCsvPath = s"${State.Root}/graft_csv/nation_bad.csv"
 
   /** Malformed-row handling on the CSV ingest path (the robustness
     * half of q24 — a real feed always carries torn rows): the fixture
@@ -758,7 +758,7 @@ object Relational {
       .orderBy("n_nationkey")
   }
 
-  private val jsonlDir = "/root/repo/target/graft_jsonl/supplier"
+  private val jsonlDir = s"${State.Root}/graft_jsonl/supplier"
 
   /** JSONL (newline-delimited JSON) source — the interchange format
     * every LLM data pipeline ingests. The file is materialized from
@@ -779,7 +779,7 @@ object Relational {
       .orderBy("s_suppkey")
   }
 
-  private val orcDir = "/root/repo/target/graft_orc/orders"
+  private val orcDir = s"${State.Root}/graft_orc/orders"
 
   /** ORC round-trip: the second columnar format Spark ships natively.
     * A filtered projection is written to ORC, read back, and

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Op
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{State, Tables}
 
 /** §2.3 approximate-nearest-neighbor search over the `embeddings`
   * table (`vec_id`, `embedding: array<float>`, `label`).
@@ -368,12 +368,11 @@ object Similarity {
        |     ORDER BY list_cosine_similarity(e.v, c2.cv) DESC, c2.cell ASC LIMIT 1) AS cell
        |  FROM e)""".stripMargin
 
-  /** Centroids per dataset, trained once and reused — what a real
-    * IVF index does (train at build time, broadcast at query time);
-    * retraining per query would double every lookup's cost with two
-    * extra jobs. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[Seq[Double]]]()
+  /** Centroids per dataset, trained once per snapshot and reused —
+    * what a real IVF index does (train at build time, broadcast at
+    * query time); retraining per query would double every lookup's
+    * cost with two extra jobs. */
+  private[graft] val centroids = new State.Memo[String, Long, Seq[Seq[Double]]]
 
   val annIvf: Op = Op.sql("ann_ivf",
     ivfCentroidCteSql +
@@ -389,8 +388,6 @@ object Similarity {
        |  WHERE c.vec_id <> p.query_id)
        |WHERE rn <= $TopK
        |ORDER BY query_id, neighbor_id""".stripMargin) { (s, dir) =>
-    // cache key includes the parquet mtime so a regenerated dataset at
-    // the same path retrains instead of probing stale cells
     Bounded.ordered(
       ivfTopK(emb(s, dir), emb(s, dir).filter(col("vec_id") < NumQueries),
         TopK, centroidsFor(s, dir)),
@@ -552,51 +549,24 @@ object Similarity {
       .orderBy("cell")
   }
 
-  /** Centroids for a dataset, trained once per (dir, file-mtime) and
-    * reused — shared by [[annIvf]], [[annIvfPersist]] and the specs
-    * so every path probes the EXACT same centroids (independent
+  /** Centroids for a dataset, trained once per snapshot of
+    * `embeddings` — shared by [[annIvf]], [[annIvfPersist]] and the
+    * specs so every path probes the EXACT same centroids (independent
     * retraining could differ in the last ulp of an avg() and flip a
     * boundary assignment). */
-  def centroidsFor(s: SparkSession, dir: String): Seq[Seq[Double]] = {
-    val key = (dir, new java.io.File(s"$dir/embeddings.parquet").lastModified())
-    centroidCache.computeIfAbsent(key, _ => ivfCentroids(emb(s, dir)))
-  }
+  def centroidsFor(s: SparkSession, dir: String): Seq[Seq[Double]] =
+    centroids(dir, Tables.stamp(dir, "embeddings"))(ivfCentroids(emb(s, dir)))
 
-  /** Index directory per (dir, mtime) — a stale lookup DataFrame can
-    * never silently read a different corpus's index. The readable
-    * sanitized path alone is NOT injective (`/data/sf-1` and
-    * `/data/sf.1` both sanitize to `_data_sf_1`), so the tag also
-    * carries a full MD5 of the raw path — collision-free in practice,
-    * never truncated — while the sanitized prefix keeps the dir
-    * human-debuggable. */
-  /** Index FORMAT generation, folded into the path digest: bump
+  /** Index FORMAT generation, part of the generation's name: bump
     * whenever build logic changes what persisted cells/codes mean
     * (f3 = fixed-point centroid/codebook means, round 7 — an index
-    * built by avg-means code must never be probed by this code, and
-    * the digest change guarantees it without disturbing the
-    * stale-mtime sweep's name shape). */
+    * built by avg-means code must never be probed by this code). */
   private val IndexFormat = "f3"
 
-  /** Human-readable dataset prefix of an index dir name — also the
-    * stale-sweep key: generations to drop are matched on
-    * `datasetTag(dir) + "_"`, NOT on the full `tag_digest_` prefix,
-    * so a FORMAT bump (new digest) sweeps the old format's
-    * generations of the same dataset instead of leaking them
-    * (ADVICE r7). Sanitized-tag collisions across datasets are
-    * harmless here: a sweep can at worst delete a colliding LIVE
-    * index, which its own `_SUCCESS` check then rebuilds — the
-    * digest in the PATH still guarantees no wrong index is probed. */
-  def datasetTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  def ivfIndexPath(dir: String): String = {
-    val mtime = new java.io.File(s"$dir/embeddings.parquet").lastModified()
-    val tag = datasetTag(dir)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir\n$IndexFormat".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"/root/repo/target/graft_ivf_index/${tag}_${digest}_$mtime"
-  }
-
-  private val indexBuildLock = new Object
+  /** The persisted IVF index of a dataset's current `embeddings`
+    * snapshot (a [[State.artifact]] generation). */
+  def ivfIndexPath(dir: String): String =
+    State.path("ivf_index", dir, "embeddings", IndexFormat)
 
   /** The "inverted lists ARE the partitioning" claim made PHYSICAL:
     * the corpus is WRITTEN partitioned by IVF cell (`cell=N/` dirs,
@@ -626,42 +596,33 @@ object Similarity {
          |ORDER BY list_cosine_similarity(q.v, c.v) DESC, c.vec_id LIMIT $TopK""".stripMargin) { (s, dir) =>
     val e = emb(s, dir)
     val centroids = centroidsFor(s, dir)
-    val path = ivfIndexPath(dir)
     // "built" = Spark's _SUCCESS commit marker, written only after the
     // job completes — a crashed or in-flight build is retried, never
     // probed (an in-memory "already built" flag set before the write
     // would permanently mask a partial index)
-    indexBuildLock.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // drop stale index versions of this dataset (older mtimes AND
-        // older format digests); the PQ family (`_pq`) cleans its own
-        graft.sources.LocalDir.dropStaleSiblings(
-          new java.io.File(path), datasetTag(dir) + "_", pqFamily = false)
+    State.artifact("ivf_index", dir, "embeddings", IndexFormat) { path =>
+      if (!new java.io.File(s"$path/_SUCCESS").exists())
         e.withColumn("cell", cellExpr(typedLit(centroids), col("v")))
           .write.mode("overwrite").partitionBy("cell").parquet(path)
-      }
     }
     val qv = e.filter(col("vec_id") === 0L).head().getSeq[Double](1).toSeq
     ivfPointLookup(s, dir, centroids, 0L, qv)
   }
 
-  /** Base-slice centroids for the appendable index, trained once per
-    * (dir, mtime) like [[centroidsFor]] but on `vec_id < cut` only —
-    * the index's frozen training set. */
-  def baseCentroidsFor(s: SparkSession, dir: String, cut: Long): Seq[Seq[Double]] = {
-    val key = (s"$dir#base$cut",
-      new java.io.File(s"$dir/embeddings.parquet").lastModified())
-    centroidCache.computeIfAbsent(key,
-      _ => ivfCentroids(emb(s, dir).filter(col("vec_id") < cut)))
-  }
+  private val baseCentroids = new State.Memo[String, (Long, Long), Seq[Seq[Double]]]
 
-  def appendIndexPath(dir: String): String = {
-    val mtime = new java.io.File(s"$dir/embeddings.parquet").lastModified()
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir\n$IndexFormat\nappend".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"/root/repo/target/graft_ivf_index/${datasetTag(dir)}_${digest}_${mtime}_apnd"
-  }
+  /** Base-slice centroids for the appendable index, trained once per
+    * snapshot like [[centroidsFor]] but on `vec_id < cut` only — the
+    * index's frozen training set. One entry per dataset: the cut is
+    * part of the stamp, since a rewrite can move it. */
+  def baseCentroidsFor(s: SparkSession, dir: String, cut: Long): Seq[Seq[Double]] =
+    baseCentroids(dir, (Tables.stamp(dir, "embeddings"), cut))(
+      ivfCentroids(emb(s, dir).filter(col("vec_id") < cut)))
+
+  /** The appendable IVF index (`base/` and `delta/`) of a dataset's
+    * current `embeddings` snapshot. */
+  def appendIndexPath(dir: String): String =
+    State.path("ivf_append", dir, "embeddings", IndexFormat)
 
   /** Incremental IVF index maintenance (VERDICT r7 task 8 — the
     * production gap a full-rebuild-only index has): the corpus's
@@ -705,15 +666,11 @@ object Similarity {
     val cut = math.floor(maxId * AppendFrac).toLong
     val centroids = baseCentroidsFor(s, dir, cut)
     val cLit = typedLit(centroids)
-    val path = appendIndexPath(dir)
-    indexBuildLock.synchronized {
-      if (!new java.io.File(s"$path/base/_SUCCESS").exists()) {
-        graft.sources.LocalDir.dropStaleSiblings(
-          new java.io.File(path), datasetTag(dir) + "_", "_apnd")
+    val path = State.artifact("ivf_append", dir, "embeddings", IndexFormat) { path =>
+      if (!new java.io.File(s"$path/base/_SUCCESS").exists())
         e.filter(col("vec_id") < cut)
           .withColumn("cell", cellExpr(cLit, col("v")))
           .write.mode("overwrite").partitionBy("cell").parquet(s"$path/base")
-      }
       if (!new java.io.File(s"$path/delta/_SUCCESS").exists()) {
         // the incremental claim: ONLY the new ids are scanned
         // (pushed predicate) and assigned; base/ is not touched
@@ -880,14 +837,11 @@ object Similarity {
         round(col("cos_raw"), 6).as("cos"))
   }
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[Double]]()
+  private[graft] val codebooks = new State.Memo[String, Long, Seq[Double]]
 
-  /** The trained codebook for a dataset, once per (dir, mtime). */
-  def codebookFor(s: SparkSession, dir: String): Seq[Double] = {
-    val key = (dir, new java.io.File(s"$dir/embeddings.parquet").lastModified())
-    pqCache.computeIfAbsent(key, _ => pqTrain(unitNorm(emb(s, dir))))
-  }
+  /** The trained codebook for a dataset, once per snapshot. */
+  def codebookFor(s: SparkSession, dir: String): Seq[Double] =
+    codebooks(dir, Tables.stamp(dir, "embeddings"))(pqTrain(unitNorm(emb(s, dir))))
 
   /** The PQ pipeline replayed in the oracle (round 7; rows-only
     * before): unit-norm (list_dot_product's accumulation = the HOF
@@ -1047,17 +1001,14 @@ object Similarity {
   /** Shortlist factor for the two quantized scan paths below. */
   val SqShortlist = 4
 
-  private val sq8Cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Double]()
+  private[graft] val sq8Scales = new State.Memo[String, Long, Double]
 
   /** The SQ8 scale 127/max|nv_d| for a dataset, computed once per
-    * (dir, mtime) — index metadata like the IVF centroids: one
-    * order-free max-of-abs aggregate over the unit-normed corpus, a
-    * single double on the driver. */
-  def sq8InvFor(s: SparkSession, dir: String): Double = {
-    val key = (dir, new java.io.File(s"$dir/embeddings.parquet").lastModified())
-    sq8Cache.computeIfAbsent(key, _ => sq8Inv(unitNorm(emb(s, dir))))
-  }
+    * snapshot — index metadata like the IVF centroids: one order-free
+    * max-of-abs aggregate over the unit-normed corpus, a single double
+    * on the driver. */
+  def sq8InvFor(s: SparkSession, dir: String): Double =
+    sq8Scales(dir, Tables.stamp(dir, "embeddings"))(sq8Inv(unitNorm(emb(s, dir))))
 
   /** The SQ8 scale over an arbitrary unit-normed `(vec_id, v)` frame
     * — factored for AnnSpec's random-vector property test. */
@@ -1226,29 +1177,27 @@ object Similarity {
     lut.toSeq
   }
 
-  /** `_f2` is the index FORMAT version: bump it whenever the build
-    * logic changes what the persisted bytes mean (f2 = cells assigned
-    * from RAW vectors via cellExpr), so an index built by older code
-    * for the same (dir, mtime) can never be silently reused with
-    * mismatched cell assignments — `_SUCCESS` only says the build
-    * finished, not that it was built by THIS code. The `_pq` suffix
-    * stays last: dropStaleSiblings keys the PQ family on it, which
-    * also sweeps old-format `*_pq` dirs on the next build. */
-  def pqIndexPath(dir: String): String = ivfIndexPath(dir) + "_f2_pq"
+  /** The IVF+PQ index FORMAT: bump it whenever the build logic
+    * changes what the persisted bytes mean (pq-f2 = cells assigned from
+    * RAW vectors via cellExpr), so an index built by older code for the
+    * same snapshot is never reused with mismatched cell assignments —
+    * `_SUCCESS` only says the build finished, not that THIS code built
+    * it. */
+  private val PqIndexFormat = s"$IndexFormat/pq-f2"
 
-  /** Build the persisted IVF+PQ index once per (dir, mtime): every
+  /** The persisted IVF+PQ index of a dataset's current `embeddings`
+    * snapshot. */
+  def pqIndexPath(dir: String): String =
+    State.path("ivfpq", dir, "embeddings", PqIndexFormat)
+
+  /** Build the persisted IVF+PQ index once per snapshot: every
     * vector's PQ codes, WRITTEN partitioned by its IVF cell — the PQ
     * compression living inside ann_ivf_persist's inverted-list
     * layout. 8 B of codes per vector per cell dir; the full-precision
     * vectors never enter the index. */
   def ensureIvfPqIndex(s: SparkSession, dir: String): Unit = {
-    val path = pqIndexPath(dir)
-    indexBuildLock.synchronized {
+    State.artifact("ivfpq", dir, "embeddings", PqIndexFormat) { path =>
       if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // drop stale PQ-index versions of this dataset (older mtimes
-        // and format digests — same sweep key as the IVF family)
-        graft.sources.LocalDir.dropStaleSiblings(
-          new java.io.File(path), datasetTag(dir) + "_", pqFamily = true)
         val centroids = centroidsFor(s, dir)
         val cb = codebookFor(s, dir)
         // cell from the RAW vector through cellExpr — bit-identical

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Op
-import graft.sources.Tables
+import graft.sources.{State, Tables}
 
 /** §2.3 text-analysis operators for a large-scale training-data
   * pipeline, over the `documents` table.
@@ -974,20 +974,18 @@ object TextAnalysis {
 
   val BpeRounds = 12
 
-  /** Merge table per dataset, trained once and reused — the vocab is
-    * a build-time artifact exactly like the ANN centroids
-    * ([[Similarity.centroidsFor]]); encode calls must not retrain. */
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[(Int, String, String, Long)]]()
+  private val bpeMerges = new State.Memo[String, Long, Seq[(Int, String, String, Long)]]
 
-  def bpeMergesFor(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] = {
-    val key = (dir, new java.io.File(s"$dir/documents.parquet").lastModified())
-    bpeCache.computeIfAbsent(key, _ => bpeTrain(
+  /** Merge table per dataset, trained once per snapshot of `documents`
+    * — the vocab is a build-time artifact exactly like the ANN
+    * centroids ([[Similarity.centroidsFor]]); encode calls must not
+    * retrain. */
+  def bpeMergesFor(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
+    bpeMerges(dir, Tables.stamp(dir, "documents"))(bpeTrain(
       docs(s, dir)
         .select(explode(split(lower(col("text")), "\\s+")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt")),
       BpeRounds))
-  }
 
   /** The BPE training loop replayed INSIDE the oracle (round 7; it
     * was rows-only on the "iterative, so no SQL oracle" argument —

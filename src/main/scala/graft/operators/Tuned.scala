@@ -2,15 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.State
+
 /** The one place an operator gets a session with confs of its own.
   *
   * [[derive]] is the mechanism: a child of the caller's session with
-  * the given confs set, memoized per (parent, conf set). Nothing on
-  * the caller's session is ever mutated, so a concurrent caller keeps
-  * its own confs (the ADVICE r11 isolation rule), and one conf set on
-  * one parent is one SessionState per JVM, so
-  * [[graft.sources.Tables]]' per-session relation cache stays warm
-  * across calls. Operators never call `newSession` themselves.
+  * the caller's runtime SQL confs and the given confs on top, memoized
+  * per (parent, conf set). Nothing on the caller's session is ever
+  * mutated, so a concurrent caller keeps its own confs (the ADVICE r11
+  * isolation rule), and one conf set on one parent is one SessionState
+  * per JVM, so [[graft.sources.Tables]]' per-session relations stay
+  * warm across calls, conf changes included. Operators never call
+  * `newSession` themselves.
   *
   * [[sizedOneJob]] is the one scheduling policy on top of it: AQE off
   * and a static shuffle-partition count derived from the op's input-
@@ -19,28 +22,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[derive]] at their call site, with the measurement that chose
   * them.
   *
-  * Lifetime: the memo holds its parents strongly, as Tables' cache
-  * does; weak keys would free nothing while Tables' cached relations
-  * pin the same sessions.
+  * Lifetime: the memo holds its parents strongly, as Tables' relations
+  * do; weak keys would free nothing while those pin the same sessions.
   */
 object Tuned {
-  // Keyed on the parent SparkSession OBJECT (r13, ADVICE r12):
-  // SparkSession does not override equals, so map equality is
-  // identity — collision-free, unlike an identityHashCode int key
-  // under which two live parents colliding would share a derived
-  // session (wrong conf) silently. The conf set is a Map, so the
-  // order the confs are passed in does not matter.
+  // keyed on the parent session (by identity) and the conf set
   private val derived =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Map[String, String]), SparkSession]()
+    new State.Memo[(SparkSession, Map[String, String]), Unit, SparkSession]
 
-  /** A child session of `parent` with `confs` set, memoized per
-    * (parent, conf set). The parent is never mutated. */
-  def derive(parent: SparkSession, confs: (String, String)*): SparkSession =
-    derived.computeIfAbsent((parent, confs.toMap), { case (_, set) =>
-      val s = parent.newSession()
-      set.foreach { case (k, v) => s.conf.set(k, v) }
-      s
-    })
+  /** A child session of `parent` with `parent`'s runtime SQL confs and
+    * `confs` on top, memoized per (parent, conf set). `newSession`
+    * starts from the context's conf, so the parent's modifiable confs
+    * are copied (static and core confs cannot be set on a session and
+    * are the context's anyway) on every call. The child is kept, not
+    * replaced (a fresh one's table loads start a job, so `graft.Op`
+    * would not prepare the rebuilt plan), and ops sharing it see the
+    * parent's confs of the latest call: `graft.Op` rebuilds a plan
+    * whose session's confs moved. A returned DataFrame reads the
+    * child's confs when it executes, as one on the parent does. */
+  def derive(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val set = confs.toMap
+    val child = derived((parent, set), ())(parent.newSession())
+    def modifiable(s: SparkSession) =
+      s.conf.getAll.filter { case (k, _) => s.conf.isModifiable(k) }
+    val want = modifiable(parent) ++ set
+    child.synchronized {
+      val have = modifiable(child)
+      (have.keySet -- want.keySet).foreach(child.conf.unset)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) child.conf.set(k, v) }
+    }
+    child
+  }
 
   /** Shuffle-partition target for [[sizedOneJob]]: the same
     * 64 MB/partition advisory AQE coalesces toward — the static

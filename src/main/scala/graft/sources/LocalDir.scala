@@ -2,10 +2,10 @@ package graft.sources
 
 import java.io.File
 
-/** Local-filesystem lifecycle helpers shared by the on-disk index and
-  * run-log directories (Similarity's IVF/PQ indexes, kv.KVLog). On a
-  * cluster these layouts live on HDFS/object storage and lifecycle is
-  * the catalog's job; locally the builders clean up after themselves.
+/** Local-filesystem lifecycle helper shared by the on-disk state
+  * directories ([[State.artifact]] generations, kv.KVLog). On a cluster
+  * these layouts live on HDFS/object storage and lifecycle is the
+  * catalog's job; locally the builders clean up after themselves.
   */
 object LocalDir {
 
@@ -16,27 +16,4 @@ object LocalDir {
       Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRecursively)
     f.delete(): Unit
   }
-
-  /** Index-family suffix of a generation dir name (`"_pq"` for the
-    * PQ family, `"_apnd"` for the appendable IVF family, `""` for
-    * the plain IVF family) — each family cleans only its own
-    * generations, so e.g. the plain-IVF sweep can never delete a
-    * live appendable index of the same dataset. */
-  private def familyOf(name: String): String =
-    if (name.endsWith("_pq")) "_pq"
-    else if (name.endsWith("_apnd")) "_apnd"
-    else ""
-
-  /** Drop sibling directories of `keep` that share `prefix` AND
-    * `keep`'s own family — stale mtime/format-versions of a rebuilt
-    * index. */
-  def dropStaleSiblings(keep: File, prefix: String, pqFamily: Boolean): Unit =
-    dropStaleSiblings(keep, prefix, if (pqFamily) "_pq" else "")
-
-  def dropStaleSiblings(keep: File, prefix: String, family: String): Unit =
-    Option(keep.getParentFile.listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.getName.startsWith(prefix) &&
-        f.getPath != keep.getPath &&
-        familyOf(f.getName) == family)
-      .foreach(deleteRecursively)
 }

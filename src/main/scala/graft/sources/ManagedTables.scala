@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StructType
   */
 object ManagedTables {
 
-  val defaultWarehouse = "/root/repo/target/graft_warehouse"
+  val defaultWarehouse = s"${State.Root}/graft_warehouse"
 
   private def dir(wh: String, name: String) = s"$wh/$name"
 

@@ -1,7 +1,6 @@
 package graft.sources
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -17,62 +16,42 @@ import org.apache.spark.sql.sources.BaseRelation
   * pruning for free (the reference implements those as optimizer
   * rules `column_pruning.rs` / `pushdown_predicates.rs`).
   *
-  * A table's snapshot is its directory mtime, read on every [[load]]:
-  * one analyzed relation is cached per (session, path) and replaced
-  * when the mtime changes. The same stamp keys `graft.Op`'s prepared
-  * plans, which [[recording]] serves. A replaced relation stays
-  * reachable from every prepared plan built over it until that op is
-  * called again on the same (session, dir) and rebuilds. Relations
-  * are built with [[SnapshotParquetFormat]], which reuses each scan
-  * shape's Parquet reader across queries.
+  * A table's snapshot is its directory mtime, [[stamp]], read on every
+  * [[load]]: one analyzed relation is kept per (session, path) in a
+  * [[State.Memo]] and replaced when the stamp changes. The same stamp
+  * keys `graft.Op`'s prepared plans, which [[recording]] serves. A
+  * replaced relation stays reachable from every prepared plan built
+  * over it until that op is called again on the same (session, dir)
+  * and rebuilds. Relations are built with [[SnapshotParquetFormat]],
+  * which reuses each scan shape's Parquet reader across queries.
   */
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** One loaded table: the directory mtime it was read at and the
-    * analyzed DataFrame. */
-  private final case class Loaded(mtime: Long, df: DataFrame)
-
-  // Analyzed-DataFrame cache, one entry per (session, path).
-  // `spark.read.parquet` pays a file listing + a parquet footer
-  // schema read EVERY call — measured ~0.3 s of the 0.74 s wall for
-  // the 5-table q10 at sf0.1 (target/profile.json), and a real
-  // per-query driver cost on a 100 TB table with 10^5 files. A
-  // long-running engine lists a table once and replans from the
-  // cached relation. Each call reads the directory's mtime; when it
-  // differs from the entry's, the table was rewritten, and the entry
-  // is REPLACED by a fresh load, so a rewritten table's old relation
-  // (and its stale file index) is not pinned for the life of the JVM.
-  // Bounded: |sessions|x|dirs|x|tables| analyzed plans, no data —
-  // plan-only, so executors hold nothing.
-  // Keyed on the SparkSession OBJECT (r13, ADVICE r12):
-  // SparkSession does not override equals, so map equality is
-  // identity — collision-free, unlike the identityHashCode int key
-  // two live sessions could in principle share. The strong session
-  // reference pins nothing new: the cached DataFrames already hold
-  // their session.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Loaded]()
+  // Analyzed relations, one per (session, path) at the path's stamp.
+  // `spark.read.parquet` lists the files and reads a footer schema on
+  // every call: measured ~0.3 s of the 0.74 s wall of the 5-table q10
+  // at sf0.1, and a real per-query driver cost on a 100 TB table with
+  // 10^5 files. Plans only, so executors hold nothing. SparkSession
+  // does not override equals, so the session key compares by identity.
+  private val cache = new State.Memo[(SparkSession, String), Long, DataFrame]
 
   /** The snapshot stamp of a table directory: its mtime in ms, or -1
-    * if it cannot be read. [[load]] and the prepared-plan memo in
-    * [[graft.Op]] compare the same stamp. */
+    * if it cannot be read. [[load]], the prepared plans of [[graft.Op]]
+    * and every [[State]] memo and artefact compare it. */
   private[graft] def stamp(path: String): Long =
     try java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(path)).toMillis
     catch { case _: Throwable => -1L }
 
+  /** The stamp of table `name` in `dir`. */
+  private[graft] def stamp(dir: String, name: String): Long = stamp(s"$dir/$name.parquet")
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val mtime = stamp(path)
-    // a hit takes no lock; only a miss or a stale entry computes
-    val hit = cache.get((spark, path))
-    val df =
-      if (hit != null && hit.mtime == mtime) hit.df
-      else cache.compute((spark, path), (_, old) =>
-        if (old != null && old.mtime == mtime) old
-        else Loaded(mtime, loadUncached(spark, dir, name))).df
+    val df = cache((spark, path), mtime)(loadUncached(spark, dir, name))
     val loads = recorder.get
     if (loads != null)
       loads += Load(path, mtime, df.queryExecution.analyzed.collectFirst {
@@ -104,7 +83,7 @@ object Tables {
 
   /** Number of cached loads of `path`, over all sessions. */
   private[graft] def cachedLoads(path: String): Int =
-    cache.keySet().asScala.count(_._2 == path)
+    cache.keys.count(_._2 == path)
 
   private def loadUncached(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp columns arrive in whichever physical form the data

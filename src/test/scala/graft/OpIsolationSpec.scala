@@ -6,7 +6,8 @@ import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.{avg, col}
 
 import graft.operators.Tuned
@@ -90,6 +91,50 @@ class OpIsolationSpec extends SparkSuite {
       "each construction of q65 built a session of its own")
     assert(!(a.sparkSession eq caller), "q65 ran on the caller's own session")
     assert(keys.map(caller.conf.get) == before, "q65 changed the caller's confs")
+  }
+
+  /** Whether every file scan of `df`'s executed plan is vectorized. */
+  private def scansColumnar(df: DataFrame): Boolean = {
+    val scans = df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty, "no file scan")
+    scans.forall(_.supportsColumnar)
+  }
+
+  test("derived sessions inherit the caller's runtime confs and leave them alone") {
+    val caller = spark.newSession()
+    val q2 = SparkEntry.queries("q2_filter_project")
+    def columnar: Boolean = scansColumnar(q2(caller, sfDir))
+    assert(columnar, "q2's scan is not vectorized by default")
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    caller.conf.set(key, "false")
+    val confs = caller.conf.getAll
+    try {
+      assert(!columnar, s"q2's derived session ignored the caller's $key=false")
+      assert(caller.conf.getAll == confs, "q2 changed the caller's confs")
+    } finally caller.conf.unset(key)
+    assert(columnar, s"unsetting $key on the caller left q2's scan row-based")
+  }
+
+  test("a plan prepared on a derived session that another op re-synced is rebuilt") {
+    // q1 and q22 pin the same confs (sizedOneJob with no inputs), so
+    // they share one derived session per caller
+    val caller = spark.newSession()
+    val q1 = SparkEntry.queries("q1_agg")
+    val q22 = SparkEntry.queries("q22_window_funcs")
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    q1(caller, sfDir)
+    val before = q1(caller, sfDir)
+    assert(scansColumnar(before))
+    caller.conf.set(key, "false")
+    try {
+      val other = q22(caller, sfDir)
+      assert(other.sparkSession eq before.sparkSession, "q1 and q22 do not share a session")
+      assert(!scansColumnar(other))
+    } finally caller.conf.unset(key)
+    val after = q1(caller, sfDir)
+    assert(after.sparkSession.conf.getOption(key) == caller.conf.getOption(key),
+      s"q1 ran on a session that still holds the $key the caller removed")
+    assert(scansColumnar(after))
   }
 
   test("SqlOver binds only the relations it is given, never the session catalog") {

@@ -6,11 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan (no Spark) for the session rules in README's design
-  * rules: an operator gets confs of its own only from
+/** Source scan (no Spark) for the session and state rules in README's
+  * design rules: an operator gets confs of its own only from
   * `graft.operators.Tuned`'s memo, never by building a session or
-  * setting a conf itself, and the library packages read no
-  * environment (an entry point passes its knobs in as arguments). */
+  * setting a conf itself; the library packages read no environment
+  * (an entry point passes its knobs in as arguments); and operators
+  * keep per-snapshot state only through `graft.sources.State`, the one
+  * place that names the state root. */
 class SessionLintSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala/graft")
@@ -44,5 +46,24 @@ class SessionLintSpec extends AnyFunSuite {
       Seq("sys.env"))
     if (found.nonEmpty) fail(
       s"library code reads the environment:\n${found.mkString("\n")}")
+  }
+
+  test("operators keep no snapshot state of their own") {
+    val found = hits(Seq("operators"),
+      Seq("lastModified", "ConcurrentHashMap", "computeIfAbsent"))
+    if (found.nonEmpty) fail(
+      s"operators stamp or memoize snapshot state outside graft.sources.State:\n${found.mkString("\n")}")
+  }
+
+  test("only State names the state root") {
+    // a state path spelled as a literal below `target`, relative or
+    // absolute
+    val found = hits(Seq("operators", "sources", "kv"), Seq("\"target/", "/target/"),
+      except = Set("State.scala"))
+    if (found.nonEmpty) fail(
+      s"state paths built outside graft.sources.State.Root:\n${found.mkString("\n")}")
+    val inState = Files.readAllLines(Paths.get("src/main/scala/graft/sources/State.scala"))
+      .asScala.count(_.contains("File(\"target\")"))
+    assert(inState == 1, s"State spells the root $inState times")
   }
 }
